@@ -167,26 +167,12 @@ def _normalize_plan(plan: str) -> str:
 
 
 def _bench_artifact_path() -> str:
-    """In-repo destination for this run's JSON line: bench_r<N>.json,
-    N = 1 + the highest driver BENCH_r<NN>.json present (round-14
-    verdict #5 — BENCH_r09..r13 all lost their per-query numbers to
-    the driver's stdout tail cap; committing the builder's own final
-    artifact guarantees the NEXT round's PERF comparison a parseable
-    prev column even if stdout truncation ever regresses). The file is
-    overwritten by every bench invocation in the checkout — the copy
-    committed at round end is the round-end run."""
-    import glob
-    import re
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    rounds = []
-    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.match(r"BENCH_r(\d+)", os.path.basename(p))
-        if m:
-            rounds.append(int(m.group(1)))
-    n = max(rounds) + 1 if rounds else 0
-    name = f"bench_r{n:02d}.json" if n else "bench_latest.json"
-    return os.path.join(root, name)
+    """In-repo destination for this run's JSON line: a fixed,
+    gitignored bench_latest.json beside bench.py (round-14 verdict #5 —
+    BENCH_r09..r13 all lost their per-query numbers to the driver's
+    stdout tail cap; the file keeps the last run's full line). Every
+    bench invocation overwrites it."""
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_latest.json")
 
 
 def _write_artifact(line: str) -> str | None:
@@ -394,7 +380,8 @@ def main() -> None:
         print(f"# value_r1_comparable: null (missing {missing})", file=sys.stderr)
         r1_comparable = None
 
-    # ETL-path headline: the full parse→normalize→plugins pipeline on a
+    # ETL-path headline: one run_pipeline call into a lake (what the
+    # CLI runs: parse→normalize→sorted write→plugins→result tables) on a
     # fixed generated scenario (4 nodes × 4 clones, 120 heights ≈ 50k
     # lines). Reported under its own key so `value`/`queries` stay
     # directly comparable with earlier rounds; min-of-2 full runs so a

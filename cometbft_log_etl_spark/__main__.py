@@ -22,7 +22,8 @@ family, distributed batched inserts — sinks.MongoResultSink).
 `--stream` ingests through the Structured-Streaming path (the
 reference's dormant ParseStream entry) with an availableNow drain into
 the lake's exactly-once file sink before the plugin fan-out — same
-results, checkpointed restartable ingestion.
+results, checkpointed restartable ingestion. The CLI parses arguments,
+resolves the plugin list and makes one `pipeline.run_pipeline` call.
 """
 
 from __future__ import annotations
@@ -51,8 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.stream and not args.out:
         ap.error("--stream requires --out (the lake write is the streaming materialization the plugin fan-out reads)")
 
-    from .pipeline import etl_events, generate_sim_id, write_events
-    from .plans.registry import run_plugins
+    from .pipeline import generate_sim_id, run_pipeline
     from .session import get_spark
 
     sim_id = args.simulation or generate_sim_id()
@@ -65,76 +65,23 @@ def main(argv: list[str] | None = None) -> int:
         enabled = enabled_plugin_names(args.config)
 
     t0 = time.time()
-    # One materialization either way (see run_pipeline): with a lake
-    # destination the sorted events write IS the materialization and
-    # plugins fan out from the columnar staged table; otherwise an eager
-    # localCheckpoint truncates lineage for the fan-out.
-    dests = []
-    if args.out:
-        if args.stream:
-            # Streaming ingest (the reference's dormant ParseStream entry,
-            # dispatcher.go:101-121) drained into the lake with the
-            # exactly-once file sink; the plugin fan-out then reads the
-            # drained columnar table — same staged shape as the batch
-            # path, minus the global time sort (a stream cannot sort;
-            # event_date partitioning is the pruned-read replacement).
-            from .streaming.ingest import stream_events
-            from .streaming.sink import stream_events_to_lake
-
-            # schema probe only — strict=False so the eager identity
-            # validation job runs ONCE (inside stream_events_to_lake),
-            # not twice; the schema is identical either way
-            schema = stream_events(spark, args.dir, strict=False).schema
-            q, out_root = stream_events_to_lake(
-                spark,
-                args.dir,
-                args.out,
-                sim_id=sim_id,
-                strict=not args.no_strict,
-                partition_by_date=args.partition_by_date,
-            )
-            q.awaitTermination()
-        else:
-            out_root = f"{args.out.rstrip('/')}/{sim_id}"
-            staged = etl_events(spark, args.dir, strict=not args.no_strict)
-            write_events(staged, out_root, partition_by_date=args.partition_by_date)
-            schema = staged.schema
-        # explicit schema so a zero-event run reads back as an empty
-        # table instead of failing parquet schema inference
-        if args.partition_by_date:
-            from pyspark.sql import types as T
-
-            schema = schema.add(T.StructField("event_date", T.DateType()))
-        events = spark.read.schema(schema).parquet(f"{out_root}/events")
-        dests.append(out_root)
-    else:
-        events = etl_events(spark, args.dir, strict=not args.no_strict, materialize=True)
-    n_events = events.count()
-    results = run_plugins(events, enabled=enabled)
-    if args.with_rejects:
-        from .sources.logs import read_parse_rejects
-
-        results["parse_rejects"] = read_parse_rejects(spark, args.dir)
-    # Result tables fan out concurrently (cache-sharing family serial
-    # first) — the same two-phase discipline as run_pipeline, so the CLI
-    # and the library path can't drift apart on first-touch behavior.
-    from .plans.registry import two_phase_fanout
-
-    if args.out:
-        two_phase_fanout(
-            results,
-            lambda name, df: df.write.mode("overwrite").parquet(f"{out_root}/{name}"),
-        )
+    results = run_pipeline(
+        spark,
+        args.dir,
+        out_dir=args.out,
+        plugins=enabled,
+        strict=not args.no_strict,
+        sim_id=sim_id,
+        with_rejects=args.with_rejects,
+        mongo_uri=args.mongo_uri,
+        stream=args.stream,
+        partition_by_date=args.partition_by_date,
+    )
+    dests = [f"{args.out.rstrip('/')}/{sim_id}"] if args.out else []
     if args.mongo_uri:
-        from .sinks import MongoResultSink
-
-        sink = MongoResultSink(args.mongo_uri, sim_id)
-        sink.store("events", events)
-        two_phase_fanout(results, lambda name, df: sink.store(name, df))
         dests.append(f"{args.mongo_uri}/{sim_id}")
     print(
-        f"processed {n_events} events -> {len(results) + 1} tables "
-        f"at {' and '.join(dests)} in {time.time() - t0:.1f}s",
+        f"wrote {len(results)} tables to {' and '.join(dests)} in {time.time() - t0:.1f}s",
         file=sys.stderr,
     )
     return 0

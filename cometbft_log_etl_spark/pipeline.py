@@ -1,11 +1,14 @@
-"""End-to-end batch ETL: log dir → normalized, metadata-stamped events.
+"""End-to-end ETL: log dir → staged events → plugin tables → sinks.
 
 Mirrors the reference main() pipeline (/root/reference/main.go:24-81):
-parse directory → convert → attach per-file metadata → (sort) → sink →
+parse directory → convert → attach per-file metadata → sort → sink →
 fan out to plugin analytics. The Spark restatement (SURVEY.md §3.1):
-read → normalize (one wide DF) → materialize once (staged parquet
-with a sink, localCheckpoint without) → write events → run each
-enabled plugin off the materialized table → write result tables.
+read → normalize (one wide DF) → stage once (sorted parquet or a
+streaming drain into the lake, localCheckpoint without a lake) → run
+each enabled plugin off the staged table → write every result table.
+``run_pipeline`` is the one function that wires that chain; the CLI,
+the ETL bench (tools/bench_etl.py) and the plugin plan audit
+(tools/audit_plans.py) all call it.
 """
 
 from __future__ import annotations
@@ -22,34 +25,21 @@ def etl_events(
     spark: SparkSession,
     log_dir: str,
     strict: bool = True,
-    persist_raw: bool = False,
     materialize: bool = False,
 ) -> DataFrame:
     """Parse + normalize + enrich a directory of CometBFT node logs.
 
     The normalize step is two branches over the same parsed lines (the
     single-pass consensus projection + the P2P decode branch); with
-    file_identities that is three consumers of raw. ``persist_raw``
-    defaults to FALSE — measured and reasoned:
+    file_identities that is three consumers of raw. raw is not
+    persisted: Catalyst's JSON-expression pruning rewrites each
+    consumer's ``from_json`` to only the fields it touches, so the
+    re-reads are pruned parses, cheaper than writing and re-reading the
+    deserialized 23-field structs.
 
-    - without the persist boundary, Catalyst's JSON-expression pruning
-      rewrites each consumer's ``from_json`` to only the fields it
-      touches (identities parses 2 of 23 union-schema fields, the P2P
-      branch ~6), so the re-reads are pruned parses, not full ones
-      (locally: ~35% faster warm, equal cold);
-    - a MEMORY_AND_DISK persist of the full 23-field structs writes and
-      re-reads MORE bytes than the source text (deserialized wide
-      structs are several× the NDJSON size), so at 100 TB the persist
-      costs more IO than the ~2 extra pruned text scans it saves.
-
-    Set ``persist_raw=True`` only when the source itself is expensive
-    to rescan (e.g. decompress-heavy input); or stage
-    `read_raw_events` to parquet once and run `normalize` off that
-    (same plan shape, columnar input).
-
-    With ``materialize=True`` the result is eagerly localCheckpoint-ed
-    and the raw persist is released. For the N-plugin fan-out this is
-    decisively better than ``.cache()``: a cached DataFrame keeps its
+    With ``materialize=True`` the result is eagerly localCheckpoint-ed.
+    For the N-plugin fan-out this is decisively better than
+    ``.cache()``: a cached DataFrame keeps its
     FULL logical lineage, so every one of the ~15 downstream plugin
     plans re-analyzes and re-optimizes the whole parse→8-family-union
     tree (measured: ~7 s of driver-side planning + per-job overhead at
@@ -61,14 +51,10 @@ def etl_events(
     is staging events to the parquet sink once and fanning plugins out
     from that columnar, pruned scan (see run_pipeline).
     """
-    from pyspark import StorageLevel
-
     from .session import default_parallelism
 
     tune_session(spark)
     raw = read_raw_events(spark, log_dir)
-    if persist_raw:
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     events = normalize(raw)
     ids = file_identities(raw, strict=strict)
     # attach_metadata's own strict check scans the JOINED events — which
@@ -86,15 +72,12 @@ def etl_events(
     out = out.coalesce(default_parallelism())
     if materialize:
         out = out.localCheckpoint(eager=True)
-        if persist_raw:
-            raw.unpersist()
     return out
 
 
 def write_events(
     events: DataFrame,
     out_dir: str,
-    sort_by_time: bool = True,
     partition_by_date: bool = False,
 ) -> None:
     """O1/O2: event sink. The global time sort becomes a range-partitioned
@@ -104,7 +87,7 @@ def write_events(
     time-bounded reads partition-prune instead of scanning the corpus."""
     from pyspark.sql import functions as F
 
-    df = events.orderBy("timestamp") if sort_by_time else events
+    df = events.orderBy("timestamp")
     path = f"{out_dir.rstrip('/')}/events"
     if partition_by_date:
         df = df.withColumn("event_date", F.to_date("timestamp"))
@@ -131,57 +114,98 @@ def run_pipeline(
     strict: bool = True,
     sim_id: str | None = None,
     with_rejects: bool = False,
+    mongo_uri: str | None = None,
+    stream: bool = False,
+    partition_by_date: bool = False,
 ) -> dict[str, DataFrame]:
     """Full fan-out: normalized events + every enabled plugin's result
-    tables (O5/O6 — the single shared scan becomes one materialized
-    events table every plugin reads).
+    tables (O5/O6 — the single shared scan becomes one staged events
+    table every plugin reads). Returns ``{"events": ..., <table>: ...}``.
 
-    With an ``out_dir``, tables land under ``<out_dir>/<sim_id>/`` —
-    the reference's database-per-simulation naming (O4), with a
-    generated `cometbft_sim_…` id when none is passed, so repeated runs
-    never clobber each other.
+    Results land in the lake under ``<out_dir>/<sim_id>/`` and/or in
+    MongoDB at ``mongo_uri`` with db = ``sim_id`` — the reference's
+    database-per-simulation naming (O4), with a generated
+    `cometbft_sim_…` id when none is passed, so repeated runs never
+    clobber each other. With neither, nothing is written.
 
-    The shared events table is materialized exactly once before the
-    fan-out, two ways by destination:
+    The shared events table is staged exactly once before the fan-out:
 
     - with an ``out_dir``: the time-sorted events parquet (O1/O2) is
       written FIRST and plugins read it back — the staged table is
       columnar and compressed, every plugin scan is column-pruned, the
       lineage is one FileScan, and the sink write doubles as the
-      materialization (no second pass). This is the 100 TB shape:
-      measured faster than localCheckpoint from ~10⁶ rows up, and the
-      checkpoint's deserialized row store stops being an option long
-      before a real corpus;
+      staging (no second pass). This is the 100 TB shape: measured
+      faster than localCheckpoint from ~10⁶ rows up. With ``stream``
+      the same table is instead drained through Structured Streaming
+      (the reference's dormant ParseStream entry, dispatcher.go:101-121)
+      into the exactly-once file sink with an availableNow trigger —
+      same rows, minus the global time sort a stream cannot do;
     - without: eager localCheckpoint (see etl_events) — no disk
       location to stage to, and at in-memory scales the two are equal.
-    """
-    from .plans.registry import run_plugins
 
-    root = None
-    if out_dir is not None:
-        root = f"{out_dir.rstrip('/')}/{sim_id or generate_sim_id()}"
-        staged = etl_events(spark, log_dir, strict=strict)
-        write_events(staged, root)
-        # explicit schema: a zero-event run writes no part files, and a
-        # bare read would fail schema inference instead of returning the
-        # empty table the old cached path produced
-        events = spark.read.schema(staged.schema).parquet(f"{root}/events")
-    else:
+    Every result table then goes through the sinks' ``store`` under
+    ``registry.two_phase_fanout``. ``registry.run_plugins`` and
+    ``registry.two_phase_fanout`` are looked up on the module at call
+    time, so wrappers installed from outside (perfbench/layers.py) see
+    every table.
+    """
+    from .plans import registry
+    from .sinks import MongoResultSink, ParquetResultSink
+
+    if stream and out_dir is None:
+        raise ValueError("stream=True drains into the lake and needs an out_dir")
+    sim_id = sim_id or generate_sim_id()
+    lake = ParquetResultSink(out_dir, sim_id) if out_dir is not None else None
+    mongo = MongoResultSink(mongo_uri, sim_id) if mongo_uri is not None else None
+    if lake is None:
         events = etl_events(spark, log_dir, strict=strict, materialize=True)
+    else:
+        events = _stage_to_lake(spark, log_dir, out_dir, sim_id, strict, stream, partition_by_date)
     results: dict[str, DataFrame] = {"events": events}
+    results.update(registry.run_plugins(events, enabled=plugins))
     if with_rejects:
         # per-file drop-reason counters — the ingest job's data-quality
         # table, one extra pruned pass
         from .sources.logs import read_parse_rejects
 
         results["parse_rejects"] = read_parse_rejects(spark, log_dir)
-    results.update(run_plugins(events, enabled=plugins))
-    if root is not None:
-        from .plans.registry import two_phase_fanout
+    sinks = [s for s in (lake, mongo) if s is not None]
+    if mongo is not None:
+        mongo.store("events", events)
 
-        to_write = {n: df for n, df in results.items() if n != "events"}
-        two_phase_fanout(
-            to_write,
-            lambda name, df: df.write.mode("overwrite").parquet(f"{root}/{name}"),
-        )
+    def store(name: str, df: DataFrame) -> None:
+        for sink in sinks:
+            sink.store(name, df)
+
+    if sinks:
+        registry.two_phase_fanout({n: df for n, df in results.items() if n != "events"}, store)
     return results
+
+
+def _stage_to_lake(spark, log_dir, out_dir, sim_id, strict, stream, partition_by_date) -> DataFrame:
+    """Write ``<out_dir>/<sim_id>/events`` (sorted batch write or
+    availableNow stream drain) and read it back for the plugin fan-out."""
+    from pyspark.sql import types as T
+
+    root = f"{out_dir.rstrip('/')}/{sim_id}"
+    if stream:
+        from .streaming.ingest import stream_events
+        from .streaming.sink import stream_events_to_lake
+
+        # schema probe only — strict=False so the eager identity
+        # validation job runs ONCE (inside stream_events_to_lake)
+        schema = stream_events(spark, log_dir, strict=False).schema
+        q, _ = stream_events_to_lake(
+            spark, log_dir, out_dir, sim_id=sim_id,
+            strict=strict, partition_by_date=partition_by_date,
+        )
+        q.awaitTermination()
+    else:
+        staged = etl_events(spark, log_dir, strict=strict)
+        write_events(staged, root, partition_by_date=partition_by_date)
+        schema = staged.schema
+    # explicit schema: a zero-event run writes no part files, and a bare
+    # read would fail schema inference instead of returning an empty table
+    if partition_by_date:
+        schema = T.StructType([*schema.fields, T.StructField("event_date", T.DateType())])
+    return spark.read.schema(schema).parquet(f"{root}/events")

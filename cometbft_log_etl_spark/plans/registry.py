@@ -5,7 +5,8 @@ Reference: pkg/pluginloader/loader.go:13-74 (Register/Init/Process/
 Finalize lifecycle) and pkg/pluginsdk/interfaces.go:10-25. In Spark the
 lifecycle collapses to a pure function `f(events_df) -> dict[table_name,
 DataFrame]`; the single-pass fan-out (main.go:77-79) becomes running
-every enabled plugin off one cached events DataFrame.
+every enabled plugin off one staged events DataFrame
+(pipeline.run_pipeline).
 
 The default-enabled set mirrors internal/config/config.go:67-83.
 """
@@ -61,9 +62,11 @@ def plugins() -> dict[str, PluginFn]:
     return dict(_PLUGINS)
 
 
-def run_plugins(
-    events: DataFrame, enabled: list[str] | None = None, max_workers: int = 4
-) -> dict[str, DataFrame]:
+# threads that build plugin plans concurrently in run_plugins
+_BUILD_WORKERS = 4
+
+
+def run_plugins(events: DataFrame, enabled: list[str] | None = None) -> dict[str, DataFrame]:
     """Run each enabled plugin; returns the union of their result tables.
 
     An enabled-but-unregistered name is warned about and skipped, never
@@ -87,11 +90,8 @@ def run_plugins(
             logging.getLogger(__name__).warning(
                 "plugin %r not found in registry; continuing without it", name
             )
-    if max_workers > 1 and len(known) > 1:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            built = dict(zip(known, pool.map(lambda n: reg[n](events), known)))
-    else:
-        built = {n: reg[n](events) for n in known}
+    with ThreadPoolExecutor(max_workers=_BUILD_WORKERS) as pool:
+        built = dict(zip(known, pool.map(lambda n: reg[n](events), known)))
     out: dict[str, DataFrame] = {}
     for name in known:
         for table, df in built[name].items():
@@ -114,9 +114,9 @@ def two_phase_fanout(tables: dict, action, max_workers: int = 6) -> dict:
     cache-sharing family (CACHE_SHARING_PREFIX) serially first, then the
     independent rest concurrently — Spark's scheduler interleaves those
     jobs across executor slots, the shape that keeps a wide cluster busy
-    through many narrow stages. Shared by the production sink fan-out
-    (pipeline.run_pipeline) and the bench count path (tools/bench_etl)
-    so the first-touch discipline can't drift between them.
+    through many narrow stages. pipeline.run_pipeline writes every
+    result table through it, so the CLI, the ETL bench and the plugin
+    plan audit all share the same first-touch discipline.
 
     Returns {table: action result} in ``tables`` order. Fail-fast with
     full diagnostics: the first exception is re-raised after the pool

@@ -30,18 +30,42 @@ def _tables(root: str) -> set[str]:
     }
 
 
-def test_cli_batch_lake(spark, log_dir, tmp_path):
-    out = str(tmp_path / "lake")
-    rc = main(
-        ["--dir", log_dir, "--out", out, "--simulation", "cli_batch",
-         "--plugins", "vote-latency", "--with-rejects"]
-    )
-    assert rc == 0
+@pytest.mark.parametrize(
+    "dests", [["--out"], ["--out", "--mongo-uri"], ["--mongo-uri"]], ids=["out", "out+mongo", "mongo"]
+)
+def test_cli_batch_lake(spark, log_dir, tmp_path, monkeypatch, dests):
+    """Batch run into the lake and/or MongoDB. Mongo stores one
+    collection per lake table and one document per row; pymongo is
+    stubbed and the client is the file-backed fake from test_sinks."""
+    import sys
+    import types
+
+    from cometbft_log_etl_spark import sinks
+
+    from .test_sinks import FakeFactory, _batches
+
+    out, mongo = str(tmp_path / "lake"), str(tmp_path / "mongo")
+    monkeypatch.setitem(sys.modules, "pymongo", types.ModuleType("pymongo"))
+    monkeypatch.setattr(sinks, "_default_client_factory", FakeFactory(mongo))
+    args = ["--dir", log_dir, "--simulation", "cli_batch", "--plugins", "vote-latency", "--with-rejects"]
+    values = {"--out": out, "--mongo-uri": "mongodb://fake:27017"}
+    assert main(args + [x for d in dests for x in (d, values[d])]) == 0
+    if "--out" not in dests:
+        assert not os.path.exists(out)
+        assert main(args + ["--out", out]) == 0  # the same tables, for their row counts
     root = f"{out}/cli_batch"
     tables = _tables(root)
     assert "events" in tables and "parse_rejects" in tables
     assert len(tables) >= 3, tables  # events + rejects + vote-latency family
     assert spark.read.parquet(f"{root}/events").count() > 0
+    if "--mongo-uri" not in dests:
+        assert not os.path.exists(mongo)
+        return
+    # an empty table inserts nothing, so it has no collection directory
+    assert set(os.listdir(os.path.join(mongo, "cli_batch"))) <= tables
+    for t in sorted(tables):
+        docs = sum(len(b) for b in _batches(mongo, "cli_batch", t))
+        assert docs == spark.read.parquet(f"{root}/{t}").count(), t
 
 
 def test_cli_stream_lake_matches_batch(spark, log_dir, tmp_path):

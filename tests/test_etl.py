@@ -141,15 +141,16 @@ def test_pipeline_writes_generated_sim_dir(spark, log_dir, tmp_path):
 
 def test_bench_etl_smoke(spark):
     """The per-round bench harness must stay runnable: a break here
-    (plugin threading, the two-phase materialization, fixture drift)
-    would otherwise only surface as a crashed BENCH_r{N}.json."""
+    (plugin threading, the two-phase fan-out, fixture drift) would
+    otherwise only surface as a crashed BENCH_r{N}.json. One record
+    describes one timed run_pipeline call into a lake."""
     from tools.bench_etl import run_etl_bench
 
     r = run_etl_bench(spark, heights=10, repeat=1)
     assert r["n_lines"] > 0 and r["n_events"] > 0
     assert r["n_result_tables"] == 15
     assert r["result_rows"] > 0
-    assert r["etl_sec"] > 0 and r["plugins_sec"] > 0
+    assert r["total_sec"] > 0
 
 
 def test_normalize_preserves_file_path_verbatim(spark, log_dir):

@@ -27,7 +27,7 @@ class FakeCollection:
         os.makedirs(self.dir, exist_ok=True)
         path = os.path.join(self.dir, f"{os.getpid()}_{uuid.uuid4().hex}.json")
         with open(path, "w") as fh:
-            json.dump(docs, fh)
+            json.dump(docs, fh, default=str)  # event rows carry timestamps
 
 
 class FakeDb:

@@ -716,15 +716,14 @@ def audit_cc(spark, sf_dir: str) -> list[str]:
 def audit_plugins(spark) -> list[str]:
     """Plan gates for the production ETL fan-out (PLUGIN_EXPECTATIONS).
 
-    Builds a fixture scenario, stages events to parquet exactly like
-    run_pipeline's lake path, plans every plugin off the staged scan,
-    and checks each executed plan. Every produced table MUST have a
-    gate (and vice versa) so a new plugin can't ship ungated."""
+    Builds a fixture scenario, runs run_pipeline into a lake (so every
+    plugin is planned off the staged events scan the CLI uses), and
+    checks each result table's executed plan. Every produced table MUST
+    have a gate (and vice versa) so a new plugin can't ship ungated."""
     import shutil
     import tempfile
 
-    from cometbft_log_etl_spark.pipeline import etl_events, write_events
-    from cometbft_log_etl_spark.plans.registry import run_plugins
+    from cometbft_log_etl_spark.pipeline import run_pipeline
     from cometbft_log_etl_spark.session import persistent_rdd_ids, release_new_persists
     from tests.fixtures import build_scenario, write_logs
 
@@ -734,13 +733,8 @@ def audit_plugins(spark) -> list[str]:
     try:
         logdir = os.path.join(work, "logs")
         write_logs(build_scenario(heights=4), logdir)
-        root = os.path.join(work, "lake")
-        staged_src = etl_events(spark, logdir)
-        write_events(staged_src, root)
-        events = spark.read.schema(staged_src.schema).parquet(
-            os.path.join(root, "events")
-        )
-        tables = run_plugins(events)
+        tables = run_pipeline(spark, logdir, out_dir=os.path.join(work, "lake"), sim_id="audit")
+        del tables["events"]
         for n in sorted(set(PLUGIN_EXPECTATIONS) - set(tables)):
             failures.append(f"plugin table {n!r} gated but not produced")
         for n in sorted(set(tables) - set(PLUGIN_EXPECTATIONS)):

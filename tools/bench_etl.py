@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """ETL throughput bench: lines/sec through the full main()-parity
-pipeline (parse → normalize → identity enrichment → all 9 plugins).
+pipeline (parse → normalize → identity enrichment → sorted events lake
+→ all 9 plugins → result tables), timed as one `run_pipeline` call into
+a lake — the same call the CLI makes.
 
 The reference processes a log directory single-threaded with full
 in-memory materialization (/root/reference/main.go:46-79); this measures
@@ -66,7 +68,7 @@ def run_etl_bench(spark, heights: int, repeat: int, rounds: int = 2) -> dict:
     """Run the full pipeline on a generated scenario; return metrics.
 
     The pipeline runs `rounds` times over the same generated input and
-    the run with the best TOTAL is reported whole: the bench host has
+    the run with the best total is reported whole: the bench host has
     high run-to-run variance (hypervisor steal), and a single-shot ETL
     timing has drifted up to +66% round-over-round with byte-identical
     plans. The best run is the steady-state number; first-run
@@ -93,11 +95,10 @@ def run_etl_bench(spark, heights: int, repeat: int, rounds: int = 2) -> dict:
             sum(1 for _ in open(os.path.join(logdir, f))) for f in os.listdir(logdir)
         )
 
-        # snapshot/release around each round: every round pins a fresh
-        # localCheckpoint plus the plugin fan-out's shared intermediates,
-        # and the accumulated blocks from earlier rounds (and the
-        # headline queries before the ETL bench) are block-manager
-        # pressure that reads as round-to-round timing noise
+        # snapshot/release around each round: every round pins the plugin
+        # fan-out's shared intermediates, and the accumulated blocks from
+        # earlier rounds (and the headline queries before the ETL bench)
+        # are block-manager pressure that reads as round-to-round noise
         from cometbft_log_etl_spark.session import (
             persistent_rdd_ids,
             release_new_persists,
@@ -110,28 +111,17 @@ def run_etl_bench(spark, heights: int, repeat: int, rounds: int = 2) -> dict:
         runs = []
         for i in range(max(1, rounds)):
             before = persistent_rdd_ids(spark)
-            cpu0 = _cpu_tree_seconds(jvm_pid) if jvm_pid else None
             try:
-                r = _one_etl_run(spark, logdir, os.path.join(work, f"lake{i}"), n_lines)
-                if cpu0 is not None:
-                    r["cpu_sec"] = round(_cpu_tree_seconds(jvm_pid) - cpu0, 2)
-                runs.append(r)
+                runs.append(_one_etl_run(spark, logdir, os.path.join(work, "lake"), f"run{i}", n_lines, jvm_pid))
             finally:
                 release_new_persists(spark, before)
-        # Report the single run with the best total, NOT per-field minima:
-        # independent minima would mix timings from different runs into
-        # one record, breaking total == etl + plugins and creating
-        # phantom gaps for anyone decomposing the totals. One noisy-host
-        # shield, one internally consistent run.
         best = dict(min(runs, key=lambda r: r["total_sec"]))
-        best["staged"] = dict(min(runs, key=lambda r: r["staged"]["total_sec"])["staged"])
         best["timing"] = f"best-of-{len(runs)}-by-total"
-        # steal-immune throughput: CPU seconds of the JVM tree per full
-        # round (concurrent + staged passes over n_lines), min across
-        # rounds (round 1 carries codegen compile). Wall lines/sec says
-        # what THIS host window delivered; lines per CPU second says
-        # what the work costs — the number that must reproduce run to
-        # run (±20% bar, round-13 verdict #5).
+        # steal-immune throughput: CPU seconds of the JVM tree per run,
+        # min across rounds (round 1 carries codegen compile). Wall
+        # lines/sec says what THIS host window delivered; lines per CPU
+        # second says what the work costs — the number that must
+        # reproduce run to run (±20% bar, round-13 verdict #5).
         cpu_runs = [r["cpu_sec"] for r in runs if "cpu_sec" in r]
         if cpu_runs:
             best["cpu_sec_min"] = min(cpu_runs)
@@ -142,64 +132,23 @@ def run_etl_bench(spark, heights: int, repeat: int, rounds: int = 2) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _one_etl_run(spark, logdir: str, lake_root: str, n_lines: int) -> dict:
-    from cometbft_log_etl_spark.pipeline import etl_events
-    from cometbft_log_etl_spark.plans.registry import run_plugins
+def _one_etl_run(spark, logdir: str, lake: str, sim_id: str, n_lines: int, jvm_pid: int | None) -> dict:
+    """One timed `run_pipeline` call into ``lake``; row counts come from
+    the written parquet footers after the clock stops."""
+    from cometbft_log_etl_spark.pipeline import run_pipeline
 
+    cpu0 = _cpu_tree_seconds(jvm_pid) if jvm_pid else None
     t0 = time.time()
-    # Eager localCheckpoint (not .cache()): truncated lineage halves
-    # the 15-table fan-out's planning + job overhead — see etl_events.
-    events = etl_events(spark, logdir, materialize=True)
-    n_events = events.count()
-    t_etl = time.time() - t0
-
-    def count_tables(tables: dict) -> dict:
-        # Shared two-phase discipline (cache-sharing family serial
-        # first, independent rest concurrent) — one definition for the
-        # bench count path and the production sink fan-out, see
-        # plans/registry.two_phase_fanout.
-        from cometbft_log_etl_spark.plans.registry import two_phase_fanout
-
-        return two_phase_fanout(tables, lambda name, df: df.count())
-
-    t1 = time.time()
-    counts = count_tables(run_plugins(events))
-    t_plugins = time.time() - t1
-
-    # The PRODUCTION path (run_pipeline with a destination): sorted
-    # events parquet written once, plugins fan out from the staged
-    # columnar table. Reported alongside so rounds track both the
-    # in-memory and the staged shape (the staged one is what a lake
-    # deployment runs, and it wins from ~10^6 rows up).
-    t2 = time.time()
-    from cometbft_log_etl_spark.pipeline import write_events
-
-    staged_src = etl_events(spark, logdir)
-    write_events(staged_src, lake_root)
-    staged = spark.read.schema(staged_src.schema).parquet(
-        os.path.join(lake_root, "events")
-    )
-    t_staged_etl = time.time() - t2
-    t3 = time.time()
-    scounts = count_tables(run_plugins(staged))
-    t_staged_plugins = time.time() - t3
-
-    return {
-        "n_lines": n_lines,
-        "n_events": n_events,
-        "etl_sec": round(t_etl, 2),
-        "etl_lines_per_sec": round(n_lines / t_etl),
-        "plugins_sec": round(t_plugins, 2),
-        "total_sec": round(t_etl + t_plugins, 2),
-        "result_rows": sum(counts.values()),
-        "n_result_tables": len(counts),
-        "staged": {
-            "etl_write_sec": round(t_staged_etl, 2),
-            "plugins_sec": round(t_staged_plugins, 2),
-            "total_sec": round(t_staged_etl + t_staged_plugins, 2),
-            "result_rows": sum(scounts.values()),
-        },
-    }
+    results = run_pipeline(spark, logdir, out_dir=lake, sim_id=sim_id)
+    total = time.time() - t0
+    out = {"n_lines": n_lines, "total_sec": round(total, 2), "etl_lines_per_sec": round(n_lines / total)}
+    if cpu0 is not None:
+        out["cpu_sec"] = round(_cpu_tree_seconds(jvm_pid) - cpu0, 2)
+    rows = {n: spark.read.parquet(os.path.join(lake, sim_id, n)).count() for n in results}
+    out["n_events"] = rows.pop("events")
+    out["n_result_tables"] = len(rows)
+    out["result_rows"] = sum(rows.values())
+    return out
 
 
 def main() -> None:

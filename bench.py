@@ -237,7 +237,7 @@ def _noise_canary(spark, runs: int = 3) -> dict:
 # quiet-host canary at 0.05–0.10s min-of-3; the three noisy-window
 # artifacts (r10–r12) all recorded >= 0.14s. 0.12 splits the observed
 # bimodal distribution with margin on both sides.
-_CANARY_BAND_SEC = float(os.environ.get("SPARK_GRAFT_CANARY_BAND", "0.12"))
+_CANARY_BAND_SEC = 0.12
 
 
 def _canary_quiet(canary: dict) -> bool:

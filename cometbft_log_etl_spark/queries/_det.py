@@ -93,7 +93,7 @@ def ddbl(a, b) -> Column:
     Each per-element product fl(x*y) is the IDENTICAL double ddot12
     rounds into its decimal terms; only the summation differs (native
     double adds instead of the exact decimal fold). Used exclusively
-    inside conservative threshold pre-gates (see neardup._pair_pregate)
+    inside conservative threshold pre-gates (see _pairs._pair_pregate)
     where the exact decimal filter still adjudicates every surviving
     pair, so the fold's rounding can never reach a result."""
     return F.aggregate(

@@ -17,6 +17,7 @@ from ..tables import load
 from . import register
 from ._det import SQL_EMB_FINITE as _SQL_EMB_FINITE
 from ._det import SQL_EMB_SRC
+from ._pairs import in_array_pairs
 from ._topk import global_topk
 
 # Portable 32-bit-ish hash: int(md5(s)[:8], 16). Identical in Spark
@@ -1761,7 +1762,7 @@ def q15_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weight table — so collecting them is model-state, never
     # corpus-sized. Knowing the class list at plan time removes the two
     # scale problems the old shape had (measured 7.3s noop at sf0.1,
-    # now ~2.5s — see OPTIMIZATION_r14.md):
+    # now ~2.5s — OPTIMIZATION_r15.md, round-14 #1):
     # - the scoring join occ ⋈ dense multiplied EVERY token row by
     #   n_classes before aggregating (guide §3.3: explode-then-join
     #   multiplies the shuffle) — regrouping dense to ONE class-vector
@@ -2766,19 +2767,14 @@ def exact_substring_runs(docs: DataFrame) -> DataFrame:
         # hot stage)
         .repartition(default_parallelism())
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("occ"),
-            lambda a, i: F.transform(
-                F.slice(F.col("occ"), i + 2, F.size("occ")),
-                lambda b: F.struct(
-                    a["doc_id"].alias("doc_a"),
-                    b["doc_id"].alias("doc_b"),
-                    a["p"].alias("pa"),
-                    b["p"].alias("pb"),
-                ),
-            ),
-        )
+    pair_arr = in_array_pairs(
+        "occ",
+        lambda a, b: F.struct(
+            a["doc_id"].alias("doc_a"),
+            b["doc_id"].alias("doc_b"),
+            a["p"].alias("pa"),
+            b["p"].alias("pb"),
+        ),
     )
     pairs = (
         cells.select(F.explode(pair_arr).alias("x"))
@@ -3466,15 +3462,7 @@ def selfrep_runs(docs: DataFrame) -> DataFrame:
         # one byte-light row expanding to up to C(cap, 2) pairs
         .repartition(default_parallelism())
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ps"), i + 2, F.size("ps")),
-                lambda b: F.struct(a.alias("pa"), b.alias("pb")),
-            ),
-        )
-    )
+    pair_arr = in_array_pairs("ps", lambda a, b: F.struct(a.alias("pa"), b.alias("pb")))
     pairs = (
         cells.select("doc_id", F.explode(pair_arr).alias("x"))
         .select("doc_id", F.col("x.pa").alias("pa"), F.col("x.pb").alias("pb"))

@@ -28,8 +28,6 @@ so neither memory nor pair count can blow up on one key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -39,13 +37,13 @@ from . import register
 from ._det import (
     DEC12,
     SQL_EMB_SRC,
-    ddbl,
     dec12,
     ddot12,
     dfold12,
     dnrm12,
     finite_embeddings,
 )
+from ._pairs import cosine_pair_tier, in_array_pairs, pair_cosine
 from .datapipe import _h32
 
 _MINHASH_K = 8  # hash functions
@@ -255,26 +253,20 @@ def bucket_pair_expand(capped: DataFrame) -> DataFrame:
         # partitioning). Same reasoning as q06/q57.
         .repartition(default_parallelism())
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda b: F.struct(
-                    a["doc_id"].alias("doc_a"),
-                    b["doc_id"].alias("doc_b"),
-                    # the exact expression every consumer used to
-                    # compute post-shuffle, moved pre-shuffle verbatim
-                    F.size(
-                        F.filter(
-                            F.sequence(F.lit(1), F.lit(_MINHASH_K)),
-                            lambda i: F.element_at(a["sig"], i)
-                            == F.element_at(b["sig"], i),
-                        )
-                    ).alias("agree"),
-                ),
-            ),
-        )
+    pair_arr = in_array_pairs(
+        "ms",
+        lambda a, b: F.struct(
+            a["doc_id"].alias("doc_a"),
+            b["doc_id"].alias("doc_b"),
+            # the exact expression every consumer used to compute
+            # post-shuffle, moved pre-shuffle verbatim
+            F.size(
+                F.filter(
+                    F.sequence(F.lit(1), F.lit(_MINHASH_K)),
+                    lambda i: F.element_at(a["sig"], i) == F.element_at(b["sig"], i),
+                )
+            ).alias("agree"),
+        ),
     )
     return (
         members.select(F.explode(pair_arr).alias("p"))
@@ -493,19 +485,14 @@ def q85_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ms") > 1)
         .repartition(default_parallelism())
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda b: F.struct(
-                    a["doc_id"].alias("doc_a"),
-                    b["doc_id"].alias("doc_b"),
-                    a["grams"].alias("ga"),
-                    b["grams"].alias("gb"),
-                ),
-            ),
-        )
+    pair_arr = in_array_pairs(
+        "ms",
+        lambda a, b: F.struct(
+            a["doc_id"].alias("doc_a"),
+            b["doc_id"].alias("doc_b"),
+            a["grams"].alias("ga"),
+            b["grams"].alias("gb"),
+        ),
     )
     pairs = members.select(F.explode(pair_arr).alias("p"))
     n_common = F.size(F.array_intersect("p.ga", "p.gb"))
@@ -833,11 +820,11 @@ def cc_propagate(labels: DataFrame, sym: DataFrame, with_jump: bool) -> DataFram
 
 
 # Edge-count ceiling for the driver-local union-find branch of
-# hash_min_components (round-14 verdict #3). Deployment-tunable; the
-# default keeps the collected edge/label lists a few MB — model-state
-# sized, the tokenizer.py bounded-collect adjudication — while covering
-# every driver SF's dup graph. Set to 0 to force the distributed loop.
-_CC_LOCAL_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "200000"))
+# hash_min_components (round-14 verdict #3): keeps the collected
+# edge/label lists a few MB — model-state sized, the tokenizer.py
+# bounded-collect adjudication — while covering every driver SF's dup
+# graph. 0 forces the distributed loop (the parity tests patch it).
+_CC_LOCAL_MAX_EDGES = 200_000
 
 
 def _hash_min_local(labels: DataFrame, edge_rows) -> DataFrame:
@@ -883,7 +870,7 @@ def _hash_min_local(labels: DataFrame, edge_rows) -> DataFrame:
 
     print(
         f"[hash_min_components] local union-find over {len(edge_rows)} edges / "
-        f"{len(init)} vertices (<= SPARK_GRAFT_CC_LOCAL_MAX_EDGES)",
+        f"{len(init)} vertices",
         file=sys.stderr,
     )
     return labels.sparkSession.createDataFrame(out, schema=labels.schema)
@@ -913,7 +900,8 @@ def hash_min_components(labels: DataFrame, sym: DataFrame, max_iters: int = _CC_
 
     Size-adaptive local branch (round-14 verdict #3): ``sym`` is always
     an eagerly-checkpointed, dup-graph-sized edge list, so a LIMIT
-    probe over its cached blocks is one cheap job. When the whole graph
+    count over its cached blocks is one cheap job, and the edges are
+    collected only when that count is under the threshold. When the whole graph
     fits under _CC_LOCAL_MAX_EDGES, the distributed loop would spend
     its entire wall on per-iteration job launches (3 exchanges + a
     checkpoint per iteration for a graph that fits in one task);
@@ -928,10 +916,9 @@ def hash_min_components(labels: DataFrame, sym: DataFrame, max_iters: int = _CC_
     of diameter, strictly extending the loop's domain, while the
     distributed path keeps the fail-loud bound.
     """
-    if _CC_LOCAL_MAX_EDGES > 0:
-        probe = sym.limit(_CC_LOCAL_MAX_EDGES + 1).collect()
-        if len(probe) <= _CC_LOCAL_MAX_EDGES:
-            return _hash_min_local(labels, [(r[0], r[1]) for r in probe])
+    n = _CC_LOCAL_MAX_EDGES
+    if n > 0 and sym.limit(n + 1).count() <= n:
+        return _hash_min_local(labels, [(r[0], r[1]) for r in sym.collect()])
     for it in range(1, max_iters + 1):
         # Lazy checkpoint: the count action below both materializes the
         # iteration's labels (count needs every partition, so the whole
@@ -1833,52 +1820,6 @@ _ND_PLANES = 4  # coarser cells than q58's 8: near-dup wants recall over speed
 _ND_COSINE = 0.35  # dedup-edge threshold (tuned to the synthetic corpus)
 
 
-def _pair_pregate(a: F.Column, b: F.Column, thr: float) -> F.Column:
-    """Conservative IEEE-double pre-gate for the exact-decimal pair
-    filter ``ddot12(a.emb, b.emb) / (a.nrm * b.nrm) >= thr``.
-
-    The pair tiers' hot kernel is the DECIMAL(28,12) dot fold — a
-    BigDecimal multiply+add per element per pair — yet at every scale
-    factor (and on any sane corpus) only a fraction of a percent of
-    in-bucket pairs clear the duplicate threshold (sf0.1 probe: 549 /
-    249,792 = 0.22% in q134's stored tier). This predicate runs INSIDE
-    the pair-array build (``F.filter`` between the slice and the
-    struct-building transform), so non-candidate pairs never allocate
-    a pair struct and never pay the decimal fold; the EXACT filter
-    after the explode still adjudicates every surviving pair, so
-    results are bit-identical (guide §1.2 "per-task work": same
-    distributed shape, cheaper per-pair kernel).
-
-    Conservativeness proof (pre-gate is TRUE whenever the exact filter
-    is TRUE — the only direction that matters; extra survivors just
-    re-meet the exact filter):
-
-    - exact TRUE ⇒ ``dot_ex`` (the decimal fold cast to double) is
-      non-null ⇒ every per-element product fl(x_i·y_i) is a finite
-      double inside DECIMAL(28,12) range, and nrm_a/nrm_b are non-null
-      finite ≥ 0 (sqrt outputs).
-    - ``ddbl`` sums the IDENTICAL fl(x_i·y_i) terms in doubles:
-      |dot_dbl − dot_ex| ≤ d·5e-13 (per-term half-up rounding to 12
-      decimals) + d·eps·Σ|x_i·y_i| (double summation, eps = 2^-52)
-      + eps·|dot_ex| (the fold's final double cast), with
-      Σ|x_i·y_i| ≤ ñ_a·ñ_b ≤ (nrm_a + 3e-5)·(nrm_b + 3e-5) for any
-      dimension d ≤ 1024 (Cauchy–Schwarz; the decimal norm understates
-      the true norm by at most sqrt(d·5e-13) ≤ 2.3e-5).
-    - exact TRUE means fl(dot_ex / fl(nrm_a·nrm_b)) ≥ thr, i.e.
-      dot_ex ≥ thr·nrm_a·nrm_b·(1 − 3·eps); the degenerate
-      nrm_a·nrm_b = 0 branch (+Inf ≥ thr) forces dot_ex ≥ ~1e-12 > 0.
-    - Every error term above is ≤ 1e-9·(1 + nrm_a)·(1 + nrm_b) for
-      d ≤ 1024, so the margin 1e-6·(1+nrm_a)·(1+nrm_b) — three orders
-      of magnitude wider — makes
-      ``dot_dbl ≥ thr·nrm_a·nrm_b − margin`` implied by exact TRUE in
-      every branch. NULL/NaN/±Inf products make BOTH predicates
-      non-TRUE (null decimal terms null the exact fold; NaN compares
-      false), so no pair is dropped that the exact filter would keep.
-    """
-    margin = F.lit(1e-6) * (F.lit(1.0) + a["nrm"]) * (F.lit(1.0) + b["nrm"])
-    return ddbl(a["emb"], b["emb"]) >= F.lit(thr) * a["nrm"] * b["nrm"] - margin
-
-
 @register(
     "q06_embedding_neardup",
     headline=True,
@@ -1941,6 +1882,9 @@ def q06_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
        pairs never leave their bucket, so there is NO pairwise join, no
        position-explode, and no corpus-sized table anywhere.
 
+    Steps 2–3 are ``_pairs.cosine_pair_tier`` (keyed by bucket, lowest
+    vec_id kept), the same tier SemDeDup runs per k-means cluster.
+
     Fewer planes than q58 (4 → 16 cells): dedup wants same-cell recall
     for moderately-similar vectors, and the cap already bounds cell
     cost. All arithmetic is decimal-folded exactly like the oracle's
@@ -1951,7 +1895,7 @@ def q06_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     from ..session import default_parallelism
 
-    from ._det import dec12, ddot12, dfold12, dnrm12
+    from ._det import dec12, dfold12, dnrm12
 
     emb = finite_embeddings(load(spark, sf_dir, "embeddings")).repartition(
         default_parallelism()
@@ -1982,58 +1926,13 @@ def q06_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket.alias("bucket"),
         nrm.alias("nrm"),
     )
-    wcap = W.partitionBy("bucket").orderBy("vec_id")
-    members = (
-        staged.withColumn("_rn", F.row_number().over(wcap))
-        .filter(F.col("_rn") <= _BUCKET_CAP)
-        .drop("_rn")
-        .groupBy("bucket")
-        .agg(F.array_sort(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("ms"))
-        .filter(F.size("ms") > 1)
-        # The pair-expansion stage below is compute-dense but byte-light
-        # (one capped member-array row per bucket): AQE's byte-based
-        # coalescing serializes it into one task, and a bucket-keyed
-        # repartition is elided as redundant with the groupBy's hash
-        # partitioning. Explicit-width round-robin survives both, so the
-        # O(cap^2 * dim) scoring runs one task per bucket row; the extra
-        # exchange moves only the capped member table (cap * dim per
-        # bucket — negligible next to the cap^2 * dim scoring it unlocks).
-        .repartition(default_parallelism())
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            # the double pre-gate runs between the slice and the struct
-            # build: non-candidate pairs (99%+ at every probed SF) never
-            # allocate a pair struct and never pay the decimal fold; the
-            # exact filter below still adjudicates every survivor, so
-            # the output is bit-identical (_pair_pregate's proof)
-            lambda a, i: F.transform(
-                F.filter(
-                    F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                    lambda b: _pair_pregate(a, b, _ND_COSINE),
-                ),
-                lambda b: F.struct(
-                    a["vec_id"].alias("vec_a"),
-                    b["vec_id"].alias("vec_b"),
-                    ddot12(a["emb"], b["emb"]).alias("dot"),
-                    a["nrm"].alias("nrm_a"),
-                    b["nrm"].alias("nrm_b"),
-                ),
-            ),
-        )
-    )
-    cosine = F.col("p.dot") / (F.col("p.nrm_a") * F.col("p.nrm_b"))
-    return (
-        members.select("bucket", F.explode(pair_arr).alias("p"))
-        .filter(cosine >= _ND_COSINE)
-        .select(
-            F.col("p.vec_a").alias("vec_a"),
-            F.col("p.vec_b").alias("vec_b"),
-            "bucket",
-            F.round(cosine, 9).alias("cosine"),
-            F.col("p.vec_a").alias("keep_vec_id"),
-        )
+    pairs = cosine_pair_tier(staged, "bucket", ["vec_id"], _BUCKET_CAP, _ND_COSINE)
+    return pairs.select(
+        F.col("p.vec_a").alias("vec_a"),
+        F.col("p.vec_b").alias("vec_b"),
+        "bucket",
+        F.round(pair_cosine(), 9).alias("cosine"),
+        F.col("p.vec_a").alias("keep_vec_id"),
     )
 
 
@@ -2745,11 +2644,10 @@ def q25_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise tier is capped to its _KM_MEMBER_CAP most-central members
     (rank-filter → map-side WindowGroupLimit, the _BUCKET_CAP pattern) —
     the cap bounds the quadratic term per cluster no matter how skewed
-    the clustering gets. Pair expansion reuses the q06 in-bucket idiom:
-    capped members are collected into ONE array row per cluster and
-    pairs are expanded + scored in place with zip_with decimal folds —
-    no pairwise join, no position explode, nothing corpus-sized
-    broadcast. The final decision join is per-vector (linear).
+    the clustering gets. The pair tier is ``_semdedup_dups`` — the
+    shared ``_pairs.cosine_pair_tier`` keyed by cluster, the same one
+    q06 runs per LSH bucket and q120/q134 run per touched cluster. The
+    final decision join is per-vector (linear).
 
     The assignment is persist()ed because TWO subtrees of the final
     job consume it (the capped member tier and the per-vector decision
@@ -2772,48 +2670,8 @@ def q25_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     advice); release_new_persists drains it.
     """
     tune_session(spark)
-    from ..session import default_parallelism
-
     assign = persist_tracked(kmeans_assignments(spark, sf_dir))
-    wcap = W.partitionBy("cluster_id").orderBy(F.col("cos").desc(), "vec_id")
-    members = (
-        assign.withColumn("_rn", F.row_number().over(wcap))
-        .filter(F.col("_rn") <= _KM_MEMBER_CAP)
-        .groupBy("cluster_id")
-        .agg(F.array_sort(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("ms"))
-        .filter(F.size("ms") > 1)
-        # explicit-width spread of the capped member rows: AQE would
-        # coalesce the byte-light, compute-dense pair scoring to one
-        # task without it (the q06/q55 hardening)
-        .repartition(default_parallelism())
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            # double pre-gate before the struct build — bit-identical,
-            # see _pair_pregate (sf0.1: 562 of 249,880 pairs survive)
-            lambda a, i: F.transform(
-                F.filter(
-                    F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                    lambda b: _pair_pregate(a, b, _KM_DUP_COS),
-                ),
-                lambda b: F.struct(
-                    a["vec_id"].alias("vec_a"),
-                    b["vec_id"].alias("vec_b"),
-                    ddot12(a["emb"], b["emb"]).alias("dot"),
-                    a["nrm"].alias("nrm_a"),
-                    b["nrm"].alias("nrm_b"),
-                ),
-            ),
-        )
-    )
-    cosine = F.col("p.dot") / (F.col("p.nrm_a") * F.col("p.nrm_b"))
-    dups = (
-        members.select(F.explode(pair_arr).alias("p"))
-        .filter(cosine >= _KM_DUP_COS)
-        .groupBy(F.col("p.vec_b").alias("vec_id"))
-        .agg(F.min("p.vec_a").alias("dup_of"))
-    )
+    dups = _semdedup_dups(assign)
     return assign.join(dups, "vec_id", "left").select(
         "vec_id",
         "cluster_id",
@@ -3056,51 +2914,19 @@ def q120_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_dups(members: DataFrame) -> DataFrame:
     """(vec_id, dup_of) SemDeDup decisions over a (vec_id, cluster_id,
-    cos, emb, nrm) member frame — the q25 pair tier factored out so the
-    incremental query's new-state and stored-state scans share one
-    definition (two copies would let the churn columns drift from the
-    decision rule). Capped rank filter -> one array row per cluster ->
-    in-array pair expansion with decimal dot folds; no pairwise join."""
-    from ..session import default_parallelism
-
-    wcap = W.partitionBy("cluster_id").orderBy(F.col("cos").desc(), "vec_id")
-    grouped = (
-        members.withColumn("_rn", F.row_number().over(wcap))
-        .filter(F.col("_rn") <= _KM_MEMBER_CAP)
-        .groupBy("cluster_id")
-        .agg(F.array_sort(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("ms"))
-        .filter(F.size("ms") > 1)
-        .repartition(default_parallelism())
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            # double pre-gate before the struct build — bit-identical,
-            # see _pair_pregate (sf0.1, q134 tiers: 0.22% survive). This
-            # also shrinks q134's duplicated-dot residual to the
-            # survivor set: the two tiers' shared (model-free) pair
-            # cosines are only ever folded exactly for actual
-            # near-duplicates, so cross-tier dot sharing has nothing
-            # left to save (measured in OPTIMIZATION_r15.md #1).
-            lambda a, i: F.transform(
-                F.filter(
-                    F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                    lambda b: _pair_pregate(a, b, _KM_DUP_COS),
-                ),
-                lambda b: F.struct(
-                    a["vec_id"].alias("vec_a"),
-                    b["vec_id"].alias("vec_b"),
-                    ddot12(a["emb"], b["emb"]).alias("dot"),
-                    a["nrm"].alias("nrm_a"),
-                    b["nrm"].alias("nrm_b"),
-                ),
-            ),
-        )
-    )
-    cosine = F.col("p.dot") / (F.col("p.nrm_a") * F.col("p.nrm_b"))
+    cos, emb, nrm) member frame: every in-cluster pair among the
+    _KM_MEMBER_CAP most central members with cosine >= _KM_DUP_COS
+    marks the higher id a duplicate of its lowest such partner. The one
+    decision rule q25, q120's new- and stored-state scans, q134's two
+    tiers and streaming/semdedup.py all call (a second copy would let
+    the churn columns drift from it). The pre-gate inside the tier also
+    shrinks q134's duplicated-dot residual to the survivor set: the two
+    tiers' shared pair cosines are only ever folded exactly for actual
+    near-duplicates (sf0.1: 0.22% of pairs), so cross-tier dot sharing
+    has nothing left to save (measured in OPTIMIZATION_r15.md #1)."""
+    order = [F.col("cos").desc(), "vec_id"]
     return (
-        grouped.select(F.explode(pair_arr).alias("p"))
-        .filter(cosine >= _KM_DUP_COS)
+        cosine_pair_tier(members, "cluster_id", order, _KM_MEMBER_CAP, _KM_DUP_COS)
         .groupBy(F.col("p.vec_b").alias("vec_id"))
         .agg(F.min("p.vec_a").alias("dup_of"))
     )

@@ -193,14 +193,39 @@ def test_cpu_tree_seconds_counts_own_work():
     assert _cpu_tree_seconds(2**31 - 7) == 0.0
 
 
+def test_removed_env_knobs_are_ignored_at_import():
+    """The CC local-solve ceiling and the canary band are plain
+    constants: a malformed value in the env variables that used to set
+    them must not break importing the catalog or bench."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CC_LOCAL_MAX_EDGES="abc",
+        SPARK_GRAFT_CANARY_BAND="abc",
+    )
+    code = (
+        "from cometbft_log_etl_spark.queries import catalog\n"
+        "import bench\n"
+        "from cometbft_log_etl_spark.queries import neardup\n"
+        "assert len(catalog()) > 100\n"
+        "assert neardup._CC_LOCAL_MAX_EDGES == 200_000\n"
+        "assert bench._CANARY_BAND_SEC == 0.12\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
 def test_canary_band_classifier(monkeypatch):
     """The quiet-band rule splits the observed bimodal canary history
     (quiet hosts 0.05-0.10s, noisy windows >= 0.14s) with margin.
 
-    The band is pinned to the DEFAULT 0.12 here (round-13 advice): the
-    module-level constant reads SPARK_GRAFT_CANARY_BAND at import, so
-    asserting fixed thresholds against it would fail spuriously under
-    an env override — the override path gets its own assertion below."""
+    The band is the plain constant ``bench._CANARY_BAND_SEC`` (0.12);
+    it is patched here so the rule is also checked against a wider
+    band."""
     import bench
 
     monkeypatch.setattr(bench, "_CANARY_BAND_SEC", 0.12)
@@ -208,7 +233,7 @@ def test_canary_band_classifier(monkeypatch):
         assert bench._canary_quiet({"min_sec": quiet})
     for noisy in (0.141, 0.25, 1.4):
         assert not bench._canary_quiet({"min_sec": noisy})
-    # the env override is honored relative to whatever band is set
+    # the rule follows whatever band the constant holds
     monkeypatch.setattr(bench, "_CANARY_BAND_SEC", 0.30)
     assert bench._canary_quiet({"min_sec": 0.25})
     assert not bench._canary_quiet({"min_sec": 0.31})

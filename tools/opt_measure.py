@@ -9,7 +9,7 @@ every row, no driver collect, no output cost) and dumps
 This is a MEASUREMENT tool only: bench.py remains the driver-visible
 methodology (count()-timed, min-of-K). The noop numbers here isolate
 the computation for before/after comparisons inside the optimization
-round; OPTIMIZATION_r14.md records both.
+round; OPTIMIZATION_r15.md records both.
 
 Usage:
     python tools/opt_measure.py <plans_dir> [suffix ...]

@@ -239,6 +239,15 @@ def _noise_canary(spark, runs: int = 3) -> dict:
 # bimodal distribution with margin on both sides.
 _CANARY_BAND_SEC = 0.12
 
+# min-of-K timing: the bench host has high run-to-run variance
+# (hypervisor steal) — a single-shot timing can drift +25..66% with
+# a provably identical plan (round-5 fingerprint adjudication). The
+# per-query MIN over K timed runs after the warm pass is the
+# steady-state number; a noisy host inflates the mean, not the min.
+_BENCH_RUNS = 3
+# Cap on canary-bracketed attempts of the timed loop (see main()).
+_BENCH_ATTEMPTS = 3
+
 
 def _canary_quiet(canary: dict) -> bool:
     return canary["min_sec"] <= _CANARY_BAND_SEC
@@ -268,17 +277,10 @@ def main() -> None:
         qdef.fn(spark, sf_dir).count()
         release_new_persists(spark, _before)
 
-    # min-of-K timing: the bench host has high run-to-run variance
-    # (hypervisor steal) — a single-shot timing can drift +25..66% with
-    # a provably identical plan (round-5 fingerprint adjudication). The
-    # per-query MIN over K timed runs after the warm pass is the
-    # steady-state number; a noisy host inflates the mean, not the min.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
     # Self-adjudicating noise protocol (round-12 verdict item #3: three
     # consecutive artifacts were recorded on noisy host windows and only
     # a judge re-run could adjudicate them). The timed loop re-runs —
-    # bounded by SPARK_GRAFT_BENCH_ATTEMPTS — until BOTH canaries
+    # bounded by _BENCH_ATTEMPTS — until BOTH canaries
     # bracketing an attempt land inside the quiet band; per-query
     # timings take the min ACROSS attempts (legitimate: the warm pass
     # already separated compile costs, plans are identical across
@@ -287,7 +289,6 @@ def main() -> None:
     # deflates). The emitted JSON carries `canary_verdict` so a
     # still-noisy artifact declares itself instead of waiting for a
     # quiet-host re-run to disprove it.
-    attempts_max = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3")))
     cpu_now = _cpu_probe(spark)
     timings: dict[str, float] = {}
     cpu_timings: dict[str, float] = {}
@@ -298,13 +299,13 @@ def main() -> None:
     canary_attempts: list[dict] = []
     canary_before: dict = {}
     canary_after: dict = {}
-    for attempt in range(1, attempts_max + 1):
+    for attempt in range(1, _BENCH_ATTEMPTS + 1):
         canary_before = _noise_canary(spark)
         print(f"# attempt {attempt} canary before: {canary_before}", file=sys.stderr)
         for name, qdef in qs.items():
             samples = []
             cpu_samples = []
-            for _ in range(runs):
+            for _ in range(_BENCH_RUNS):
                 _before = persistent_rdd_ids(spark)
                 cpu0 = cpu_now() if cpu_now else None
                 t0 = time.time()
@@ -347,7 +348,7 @@ def main() -> None:
         )
         if quiet:
             break
-        if attempt < attempts_max:
+        if attempt < _BENCH_ATTEMPTS:
             print(
                 f"# attempt {attempt} canary outside the {_CANARY_BAND_SEC}s "
                 "quiet band -> retrying the timed loop",
@@ -461,7 +462,7 @@ def main() -> None:
             {
                 "metric": "headline_query_wall_time",
                 "unit": "sec",
-                "timing": f"min-of-{runs}",
+                "timing": f"min-of-{_BENCH_RUNS}",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 # v4 (round 11): per-line normalization + parent-edge
                 # tags + sorted line multiset — print-order independent

@@ -17,7 +17,7 @@ family, distributed batched inserts — sinks.MongoResultSink).
         --dir /path/to/logs --simulation run42 \
         (--out /data/lake | --mongo-uri mongodb://host:27017) \
         [--plugins vote-latency,network-latency | --config config.yaml] \
-        [--stream] [--no-strict] [--partition-by-date] [--cpus 32]
+        [--stream] [--no-strict] [--partition-by-date]
 
 `--stream` ingests through the Structured-Streaming path (the
 reference's dormant ParseStream entry) with an availableNow drain into
@@ -45,7 +45,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-strict", action="store_true", help="tolerate files without identity lines")
     ap.add_argument("--with-rejects", action="store_true", help="also emit the per-file parse-drop counters table")
     ap.add_argument("--partition-by-date", action="store_true", help="hive-partition events on event_date")
-    ap.add_argument("--cpus", type=int, default=None, help="local[N] parallelism")
     args = ap.parse_args(argv)
     if not args.out and not args.mongo_uri:
         ap.error("provide an output: --out lake root and/or --mongo-uri")
@@ -56,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
 
     sim_id = args.simulation or generate_sim_id()
-    spark = get_spark(app_name=f"cometbft-log-etl-{sim_id}", cpus=args.cpus)
+    spark = get_spark(app_name=f"cometbft-log-etl-{sim_id}")
     if args.plugins:
         enabled = args.plugins.split(",")
     else:

@@ -19,10 +19,13 @@ matches bit-for-bit between Spark and DuckDB):
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import tune_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -40,11 +43,26 @@ _REGISTRY: dict[str, QueryDef] = {}
 
 
 def register(name: str, oracle: str | None = None, headline: bool = False, tags: tuple = ()):
+    """Register a query under ``name``.
+
+    The registered callable, which the decorator also returns, calls
+    ``tune_session(spark)`` before building the plan. Every query thus
+    plans on a tuned session (UTC session time zone, partition count,
+    AQE), whether it comes from ``catalog()`` or is called directly,
+    even when the caller handed over a session it built itself.
+    """
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QueryDef(name=name, fn=fn, oracle=oracle, headline=headline, tags=tags)
-        return fn
+
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune_session(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = QueryDef(name=name, fn=tuned, oracle=oracle, headline=headline, tags=tags)
+        return tuned
 
     return deco
 

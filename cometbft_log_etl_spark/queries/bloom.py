@@ -43,7 +43,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -151,7 +150,6 @@ def q71_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Screen the incoming batch against the history Bloom position
     set, exact-verify only the maybe residue, and report per-source
     new / maybe / true-duplicate / false-positive counts."""
-    tune_session(spark)
     fp = corpus_fingerprints(load(spark, sf_dir, "documents"))
     hist = history_fingerprints(fp)
     mrow = bloom_m_frame(hist)

@@ -66,7 +66,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -104,7 +103,6 @@ def q70_source_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quality-ranked prefix), computed without ever windowing the
     corpus: distribution-table running sums + a boundary-group-only
     per-doc pass."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         "source",

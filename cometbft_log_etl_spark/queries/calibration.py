@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from .classifier import (
@@ -132,7 +131,6 @@ def q115_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-slice fit through the shared CTE chain and sweeps the same
     grid via a grid-join, cross-checking both the fit and the sweep.
     """
-    tune_session(spark)
     from ..session import default_parallelism, persist_tracked
 
     docs = load(spark, sf_dir, "documents").repartition(default_parallelism())

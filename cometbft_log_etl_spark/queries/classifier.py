@@ -72,7 +72,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import persist_tracked, tune_session
+from ..session import persist_tracked
 from ..tables import load
 from . import register
 from ._det import DEC12
@@ -619,7 +619,6 @@ def q104_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean score — the separation between the label rows is the model's
     learned signal, cross-checked cell-exact against DuckDB's unrolled
     replica of the same three steepest-descent steps."""
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents").repartition(default_parallelism())

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from ._det import SQL_EMB_FINITE as _SQL_EMB_FINITE
@@ -48,7 +47,6 @@ def q28_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is a single shuffle on the hash; the md5 is computed
     map-side so the shuffle key is 32 bytes, not the document text.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     return docs.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash")).agg(
         F.min("doc_id").alias("keep_doc_id"),
@@ -78,7 +76,6 @@ HAVING count(*) > 1
 def q30_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-fingerprint near-dup clustering: hash of the first 5 tokens
     (a cheap document fingerprint), keep clusters with >1 member."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # concat_ws SWALLOWS a null array (→ md5('')), which would lump
     # null-text docs into the empty-text fingerprint cluster; the when()
@@ -121,7 +118,6 @@ GROUP BY lang
 )
 def q52_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + stopword-ratio quality signal per language."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     tok = docs.select(
@@ -189,7 +185,6 @@ FROM feat
 )
 def q53_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features: length, lexical diversity, band."""
-    tune_session(spark)
     return quality_features(load(spark, sf_dir, "documents"))
 
 
@@ -212,7 +207,6 @@ GROUP BY lang, predicted
 def q54_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language-ID (token-presence n-gram heuristic) scored as a
     confusion matrix against the labeled `lang` column."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     predicted = (
         F.when(F.contains("text", F.lit(" the ")) & F.contains("text", F.lit(" a ")), "en")
@@ -294,7 +288,6 @@ def q113_subword_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     word costs ceil(len/4) subword units — a deterministic stand-in for
     BPE merge counts that keeps the budget arithmetic (tokens-per-doc,
     subwords-per-word) exactly checkable cross-engine."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", "[^a-zA-Z0-9]+"), lambda t: t != "")
     counts = docs.select(
@@ -345,7 +338,6 @@ def q100_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-based MinHash/SimHash signatures, word ORDER changes the
     fingerprint, so equal fingerprints mean equal token sequences. One
     map-side fold per doc, shuffle on an 8-byte key."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     fp = F.aggregate(
@@ -404,7 +396,6 @@ def q04_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     side streams. The LSH-bucketed scale path is q86_ann_lsh
     (queries/neardup.py).
     """
-    tune_session(spark)
     from ..session import default_parallelism
     from ._det import ddot12, dnrm12
 
@@ -471,7 +462,6 @@ GROUP BY emb.label
 )
 def q27_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding health stats (dimension check + mean L2 norm)."""
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "label")
     elems = _exploded_embeddings(spark, sf_dir, "vec_id")
     norms = elems.groupBy("vec_id").agg(
@@ -536,7 +526,6 @@ def q102_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully columnar (JVM regex in codegen, no UDF); at 100 TB this is a
     map-only pass, no shuffle at all.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
@@ -606,7 +595,6 @@ def q103_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange. The fraction is exact integer arithmetic divided once in
     DOUBLE, so both engines agree bit-for-bit.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.split("text", " ").alias("toks")).filter(
         F.size("toks") >= 2
@@ -658,7 +646,6 @@ def q105_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-only filter — at 100 TB the sample never materializes the
     dropped rows anywhere). Rates: en 10%, zh 50%, default 30%.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     rate = (
         F.when(F.col("lang") == "en", 10).when(F.col("lang") == "zh", 50).otherwise(30)
@@ -707,7 +694,6 @@ def q107_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB parallelism = number of streams; sub-partition by
     (lang, shard) for more). Capacity 2048 whitespace tokens.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens"))
     cum = W.partitionBy("lang").orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -767,7 +753,6 @@ def q38_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the corpus is touched once, map-side, with one shuffle on
     doc_id for the final count.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
 
     def shingles(df: DataFrame) -> DataFrame:
@@ -827,7 +812,6 @@ def q108_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk text itself never shuffles). Map-only at any scale; chunk
     counts follow document length, so no key can skew the stage.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.split("text", " ").alias("t"))
     exploded = t.select(
@@ -877,7 +861,6 @@ def q109_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially small at any corpus size. pow() is rounded before the
     normalization so both engines divide identical doubles.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -943,7 +926,6 @@ def q110_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc survive the map side of the final window. idf doubles are
     rounded before ranking so both engines order identical values.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -1039,7 +1021,6 @@ def q123_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 ranks the per-doc scores — bounded by docs matching at least
     one query term; add a score threshold pre-filter at 100 TB.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
@@ -1133,7 +1114,6 @@ def q124_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE skew-join case. Per-bigram log-probs are rounded, summed through
     decimal, divided once — bit-equal across engines.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     big = (
         docs.withColumn("toks", F.split("text", " "))
@@ -1225,7 +1205,6 @@ def q125_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same hash, so it reuses the shuffle partitioning. Output is
     one row per document.
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents")
@@ -1306,7 +1285,6 @@ def q126_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover <= k rows by construction. Integer cumulative sums divide
     the broadcast total once, rounded — exact in both engines.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(F.split("text", " ")).alias("token"))
@@ -1357,7 +1335,6 @@ def q08_source_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup scales on. No windows, no joins: this stays one pass at any
     corpus size.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     per_doc = docs.select(
@@ -1447,7 +1424,6 @@ def q11_adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — no float·count rounding hazard). Threshold tables are
     lang-cardinality tiny → broadcast back over the corpus.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     feat = quality_features(docs).select(
         "doc_id", "lang", "n_tokens", F.round("uniq_ratio", 4).alias("ur4")
@@ -1525,7 +1501,6 @@ def q13_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, and a boilerplate fingerprint with millions of copies costs a
     within-group scan, not a pair expansion.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     fp = docs.select(
         "doc_id",
@@ -1609,7 +1584,6 @@ def q14_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (`total*2 // 5`) and every double (pow, normalization)
     is rounded before use so both engines sample the identical doc set.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1713,7 +1687,6 @@ def q15_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the q95 determinism contract), and argmax ties break on class
     name, so both engines pick identical predictions.
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents")
@@ -1882,7 +1855,6 @@ def q19_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection. Zero-count bands contribute no term (the 0·ln0 = 0
     convention falls out of the inner join).
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # Band computed inline over ONE (source, text) projection — joining
     # quality_features back on doc_id would scan the corpus twice and
@@ -1973,7 +1945,6 @@ def q42_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark executes as a map-side WindowGroupLimit (only k rows per
     source survive to the final agg).
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     h = docs.select("source", _h32(F.col("text")).alias("hv")).distinct()
     exact = h.groupBy("source").agg(F.count(F.lit(1)).alias("n_exact"))
@@ -2050,7 +2021,6 @@ def q43_crossmodal_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned. Norms are rounded before the mean's decimal sum
     (the post-sqrt determinism contract).
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     elems = _exploded_embeddings(spark, sf_dir, "vec_id")
     norms = elems.groupBy("vec_id").agg(
@@ -2160,7 +2130,6 @@ def q09_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — co-located, no skew beyond genuinely viral grams, which AQE
     skew-join splits). Nothing corpus-quadratic, nothing collected.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # Gram build via zip_with over SHIFTED SLICES, not element_at in a
     # transform lambda: any non-lambda-variable expression inside a
@@ -2317,7 +2286,6 @@ def q12_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately shuffled at production scale; nothing is collected
     and nothing corpus-sized broadcasts).
     """
-    tune_session(spark)
     from ._det import emb_finite_cond
 
     lineitem = load(spark, sf_dir, "lineitem")
@@ -2602,7 +2570,6 @@ def q33_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate join BROADCASTS the fixed-size sketch; probes stream
     through it map-side.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("token"))
     exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_exact"))
@@ -2731,7 +2698,6 @@ def q45_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences within one document are naturally separate rows —
     only CROSS-document pairs (doc_a < doc_b) are emitted.
     """
-    tune_session(spark)
     return exact_substring_runs(load(spark, sf_dir, "documents"))
 
 
@@ -2864,7 +2830,6 @@ def q119_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     colocation). Output is one row per maximal span: linear in the
     corpus, never in the duplication multiplicity.
     """
-    tune_session(spark)
     return duplicated_spans(load(spark, sf_dir, "documents"))
 
 
@@ -3010,7 +2975,6 @@ def q46_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     spot Spark's concat_ws('') and SQL's string_agg-over-nothing
     would disagree).
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     return apply_span_scrub(docs, scrub_spans(docs))
 
@@ -3145,7 +3109,6 @@ def q132_duplicated_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     masking/reconstruction — no token explode, no per-position
     shuffle), so the scrub semantics exist once across q46/q112/q132
     and the streaming twin."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     spans = (
         duplicated_spans(docs)
@@ -3257,7 +3220,6 @@ def q136_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     same re-scan-over-persist trade q119 documents. No cap operator
     anywhere: this tier is exact, and the gate forbids
     WindowGroupLimit re-entering."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     grams = corpus_grams(docs)
     is_hist = F.col("doc_id") % 10 < 8
@@ -3394,7 +3356,6 @@ def q47_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static join — history stays a static frame, the batch is
     the stream.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     hist = doc_distinct_grams(docs.filter(F.col("doc_id") % 10 < 8)).select("g").distinct()
     batch = docs.filter(F.col("doc_id") % 10 >= 8)
@@ -3536,7 +3497,6 @@ SELECT doc_id, start_a, start_b, run_tokens FROM runs
 )
 def q63_selfrep_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intra-document repetition runs — see selfrep_runs."""
-    tune_session(spark)
     return selfrep_runs(load(spark, sf_dir, "documents"))
 
 
@@ -3583,7 +3543,6 @@ def q66_selfrep_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all in-array per row — no token explode Spark-side (the
     oracle explodes positions because SQL must).
     """
-    tune_session(spark)
     return selfrep_scrub(load(spark, sf_dir, "documents"))
 
 

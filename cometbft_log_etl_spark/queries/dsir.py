@@ -48,7 +48,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from .classifier import _QC_D, _qc_rows, _row_bucket_pairs, _SQL_BUCKET
@@ -189,7 +188,6 @@ def q69_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     and select the global top-{K}: the deterministic rank-selection
     twin of DSIR's importance resampling, cross-checked cell-exact
     against DuckDB's replica of the same two fitted distributions."""
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents").repartition(default_parallelism())

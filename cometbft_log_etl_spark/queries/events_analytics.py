@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from ._det import dsum, sql_dsum
@@ -64,7 +63,6 @@ WHERE event_type IN ('purchase', 'signup', 'error')
 def q20_event_type_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-set filter — consensus-steps plugin P4 (keep 11 of 30 event
     types, /root/reference/ossplugins/consensus-steps/processor.go:21-65)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.filter(F.col("event_type").isin("purchase", "signup", "error")).select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -91,7 +89,6 @@ def q21_fifo_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     key on each side + equi-join on (key, seq) — order-of-arrival
     tolerance is free because the join is symmetric.
     """
-    tune_session(spark)
     sends, recvs = _fifo_sides(spark, sf_dir)
     return sends.join(recvs, ["user_id", "match_seq"]).select(
         "user_id",
@@ -120,7 +117,6 @@ def q22_unmatched_sends(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unmatched-pending stats — P7's end-of-input unmatched sends
     (/root/reference/ossplugins/network-latency/processor.go:449-497) as a
     left-anti join on the FIFO key."""
-    tune_session(spark)
     sends, recvs = _fifo_sides(spark, sf_dir)
     return (
         sends.join(recvs.select("user_id", "match_seq"), ["user_id", "match_seq"], "left_anti")
@@ -173,7 +169,6 @@ def q23_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters with ≥3 members are kept. Built with lag + cumulative sum —
     built-in session_window can't express the dual condition.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(order))
@@ -224,7 +219,6 @@ def q24_step_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-step durations — consensus-timing's pairwise step
     deltas (P5, /root/reference/ossplugins/consensus-timing/
     processor.go:108-130) via lead() then grouped stats."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     nexted = ev.select(
@@ -263,7 +257,6 @@ def q80_rollup_overall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup with a synthetic 'overall' row per key — the network-latency
     per-pair × message-type rollup (P7c, /root/reference/ossplugins/
     network-latency/processor.go:559-643) as a native rollup."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.rollup("user_id", "event_type")
@@ -343,7 +336,6 @@ def q26_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. Bucket counts are conditional sums of the SAME
     aggregate's cnt column.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("event_type", "value")
     vc = F.round(F.col("value") * 100).cast("bigint")
     dist = ev.withColumn("vc", vc).groupBy("event_type", "vc").agg(
@@ -412,7 +404,6 @@ def q49_union_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-by-name of two differently-shaped streams + global time sort —
     the tracer-events plugin (P9, /root/reference/ossplugins/tracer-events/
     plugin.go:39-73)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -439,7 +430,6 @@ WHERE rn = 1
 def q50_first_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-row-per-key — per-file identity capture (M1, /root/reference/
     internal/app/app.go:77-86 takes the first P2pNodeID line per file)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
     part = W.partitionBy("user_id")
     return (
@@ -477,7 +467,6 @@ def q29_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window conditional count — the recovery-timeout flag
     (≥2 timeouts within the trailing window, P8a, /root/reference/
     ossplugins/timeout-analysis/processor.go:201-208)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
     trail = (
         W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, W.currentRow)
@@ -517,7 +506,6 @@ def q51_last_wins_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-writer-wins per key — p2p-messages keeps one live entry per
     composite key where duplicates re-confirm (P3, /root/reference/
     ossplugins/p2p-messages/processor.go:39-368)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_type", "event_id", "ts", "value")
     part = W.partitionBy("user_id", "event_type")
     return (
@@ -589,7 +577,6 @@ def q31_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (bounded), and the plan contains a real hash join —
     tools/audit_plans.py asserts no nested-loop/cartesian appears.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(order))
@@ -678,7 +665,6 @@ def q32_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over dozens of rows regardless of corpus size, with a
     deterministic path-string tiebreak.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     order = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -734,7 +720,6 @@ def q40_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort×offset matrix — weeks², not events. The retention window
     partitions by cohort over those tiny aggregated rows.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.date_trunc("week", F.col("ts"))
     firsts = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_week"))
@@ -804,7 +789,6 @@ def q41_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout (or AQE) reuses the exchange across stages; the funnel
     output is a single row.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -890,7 +874,6 @@ def q58_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, each division/sqrt result is rounded before the
     threshold comparison, so both engines flag identical hours.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))

@@ -48,7 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from .perplexity import _MILLI, _bigrams, fit_bigram_lm, join_lm, milli_col
@@ -172,7 +171,6 @@ GROUP BY c.source
 def q72_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation funnel report: per source, how many documents
     survive each stage and how many tokens the budget finally admits."""
-    tune_session(spark)
     from ..session import default_parallelism, persist_tracked
 
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())

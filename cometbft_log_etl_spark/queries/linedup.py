@@ -42,7 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -200,7 +199,6 @@ def q111_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-duplicated line boilerplate — the monitoring face of the
     CCNet first pass (removal rates per crawl source drive re-crawl
     and filtering decisions)."""
-    tune_session(spark)
     scrub = line_scrub(load(spark, sf_dir, "documents"))
     return scrub.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -225,5 +223,4 @@ def q112_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs with every corpus-duplicated line removed, with before/after
     line counts. A doc made entirely of boilerplate scrubs to ''
     (exact-duplicate removal as the degenerate case, like q46)."""
-    tune_session(spark)
     return line_scrub(load(spark, sf_dir, "documents"))

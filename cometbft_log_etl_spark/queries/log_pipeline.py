@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -37,7 +36,6 @@ def q82_collect_set_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-set collection per key — connected-peers sets (P7d,
     /root/reference/ossplugins/network-latency/processor.go:399-447),
     canonicalized to a sorted CSV string."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.array_join(F.array_sort(F.collect_set("event_type")), ",").alias("seen_types"),
@@ -73,7 +71,6 @@ def q83_map_style_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-side library builds real MapType columns via map_from_entries;
     here the map is canonicalized to a sorted `k:v;…` string for the
     oracle hash."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     return counts.groupBy("user_id").agg(
@@ -103,7 +100,6 @@ def q84_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot to fixed per-kind columns — the per-message-type stat
     fan-out in network-latency (P7b MessageTypes map keyed by a known
     vocabulary) as an explicit-values pivot."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_type")
     kinds = ["click", "view", "purchase", "signup", "error"]
     pivoted = (

@@ -24,7 +24,6 @@ from ..operators.multimodal import (
     sample_frames,
     synthesize_media,
 )
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -66,7 +65,6 @@ def q76_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_sampled_frames is what a stride-24 frame sampler would emit —
     the row count of the sample_frames explode, folded back per type.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     feats = decode_media(synthesize_media(docs))
     sampled = (
@@ -115,7 +113,6 @@ def q36_media_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode and decode steps are Arrow-batched mapInPandas; at lake
     scale the encode step is replaced by reading the binary column.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id")
     return decode_media_real(synthesize_real_media(docs)).select(
         "doc_id", "format", "media_type", "width", "height", "sample_rate",

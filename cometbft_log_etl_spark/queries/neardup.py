@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import persist_tracked, tune_session
+from ..session import persist_tracked
 from ..tables import load
 from . import register
 from ._det import (
@@ -312,7 +312,6 @@ def q55_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bucket); the signature agreement fraction estimates Jaccard
     without touching the text again.
     """
-    tune_session(spark)
     sigs = _minhash_sigs(load(spark, sf_dir, "documents"))
     pairs = lsh_band_pairs(sigs)
     # `agree` arrives precomputed from the pair expansion (the same
@@ -367,7 +366,6 @@ def q56_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints mark near-dup families. Hamming-ball expansion would
     add a band join like q55; equality buckets are the exact-match tier.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tokh = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
@@ -447,7 +445,6 @@ def q85_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     member-array form does strictly less shuffling and keeps the
     compute-dense stage at full width.
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents")
@@ -597,7 +594,6 @@ def q86_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     of it; recall grows with multi-probe or more tables, cost with
     plane count — the standard ANN trade.
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     # Round-14 restatement (guide §2.3/§2.4, the q06/q25 in-array
@@ -738,7 +734,6 @@ def q101_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance is cross-engine exact; the oracle recomputes the same LSH
     candidate set via the shared q55 CTE chain.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     cand = lsh_band_pairs(_minhash_sigs(docs)).select("doc_a", "doc_b")
     heads = docs.select("doc_id", F.substring("text", 1, 120).alias("head"))
@@ -1053,7 +1048,6 @@ def q37_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same components independently via a recursive transitive-closure
     CTE, so the two algorithms cross-check.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # Round-14 optimization (guide §2.4): the cluster_size window runs
     # over the EDGE-ENDPOINT label frame and rides the existing doc_id
@@ -1219,7 +1213,6 @@ def q114_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     table must replay). The DuckDB oracle resolves BOTH clusterings
     independently via recursive transitive-closure CTEs.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     sym = dup_edges(docs)
     hist_sym, frontier = incremental_frontier(sym)
@@ -1343,7 +1336,6 @@ def q116_incremental_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .datapipe import quality_features
 
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     sym = dup_edges(docs)
     hist_sym, frontier = incremental_frontier(sym)
@@ -1532,7 +1524,6 @@ def q117_lsh_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB and an SMJ there is the plan you want. The shingle rule
     is q55's verbatim, so the audit measures the production recipe.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     verified = lsh_verified_pairs(docs)
     est = F.col("n_agree").cast("double") / _MINHASH_K
@@ -1586,7 +1577,6 @@ def q118_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source lookup is two doc-keyed joins of the (bounded) verified
     pair table against the corpus, then a source-pair-cardinality
     aggregate — nothing here grows faster than the dup-pair count."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     v = lsh_verified_pairs(docs).filter(F.col("exact_j") >= _CLUSTER_JACCARD)
     sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("_sa"))
@@ -1704,7 +1694,6 @@ def q39_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade. All dot products go through DECIMAL sums so Spark and DuckDB
     agree bit-for-bit.
     """
-    tune_session(spark)
     from ..session import default_parallelism
     from ._det import ddot12, dnrm12
 
@@ -1892,7 +1881,6 @@ def q06_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     check is exact. Emits a ``keep_vec_id`` (lowest id) per edge — feed
     into hash_min_components for cluster-level dedup decisions.
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     from ._det import dec12, dfold12, dnrm12
@@ -2031,7 +2019,6 @@ def q07_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized is built, shuffled, or broadcast (norms fold into the
     scoring agg, the q39 pattern).
     """
-    tune_session(spark)
     from ..session import default_parallelism
 
     # Round-14 restatement (guide §2.3/§2.4, the q101 shape): plane
@@ -2209,7 +2196,6 @@ def q10_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .datapipe import quality_features
 
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     labels = cluster_labels(docs)
     feat = quality_features(docs).select("doc_id", "n_chars", "uniq_ratio")
@@ -2275,7 +2261,6 @@ def q57_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: positives never shuffle; negatives inherit q55's
     bucket caps, so no key can go quadratic.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
     n_chunks = (n_tok / 48).cast("bigint") + F.when(n_tok % 48 > 0, 1).otherwise(0)
@@ -2586,7 +2571,6 @@ def q17_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     as CTEs, so the distributed formulation is cross-checked against an
     independent engine, cell-exact.
     """
-    tune_session(spark)
     assign = kmeans_assignments(spark, sf_dir)
     return assign.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -2669,7 +2653,6 @@ def q25_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NEXT q25 call's persist() would silently no-op — round-9
     advice); release_new_persists drains it.
     """
-    tune_session(spark)
     assign = persist_tracked(kmeans_assignments(spark, sf_dir))
     dups = _semdedup_dups(assign)
     return assign.join(dups, "vec_id", "left").select(
@@ -2870,8 +2853,6 @@ def q120_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between re-scoring the whole corpus's clusters and
     the batch's neighborhood.
     """
-    tune_session(spark)
-
     emb = _km_emb(spark, sf_dir)
     hist = emb.filter(_inc_is_hist(F.col("vec_id")))
     a1h = _km_assign_round(hist, _km_seed_centroids(hist))
@@ -2980,8 +2961,6 @@ def q133_semantic_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the q120 front (broadcast fixed-k stored centroids,
     map-side argmax), ONE persisted assignment feeding the touched set
     and the report aggregation, everything downstream k-bounded."""
-    tune_session(spark)
-
     emb = _km_emb(spark, sf_dir)
     hist = emb.filter(_inc_is_hist(F.col("vec_id")))
     cent = _km_update_centroids(_km_assign_round(hist, _km_seed_centroids(hist)))
@@ -3093,8 +3072,6 @@ def q134_semantic_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     that touches 3 of k clusters re-scores 3 clusters, not the corpus.
     Output is churn-sized, not corpus-sized.
     """
-    tune_session(spark)
-
     # The screened frame is persisted ONCE (guide §5): before the
     # round-14 barrier, the two seed top-ks, the two model fronts'
     # main sides, and every broadcast centroid build re-derived the

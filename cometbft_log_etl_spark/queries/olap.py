@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from ._det import dsum, sql_dsum
@@ -50,7 +49,6 @@ def q91_rollup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     message_type→'overall' rollup: one shuffle computes every level via
     partial aggregation instead of a union of per-level jobs.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority", "o_totalprice")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -94,7 +92,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def q78_cube_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native CUBE over two dimensions — all 4 grouping sets, one shuffle."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")
     )
@@ -132,7 +129,6 @@ GROUP BY GROUPING SETS ((year(o_orderdate)), (o_orderpriority))
 )
 def q92_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS: two independent summaries in one pass."""
-    tune_session(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
     return spark.sql(
         f"""
@@ -172,7 +168,6 @@ def q93_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     path is the only affordable one (fixed-size sketch, map-side
     partial merge, no shuffle of distinct values).
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     ex = orders.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").alias("exact_customers"),
@@ -206,7 +201,6 @@ def q94_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k rows per group — the window-rank idiom (rank pushdown at
     scale: Spark 3.5+ inserts a per-partition WindowGroupLimit so only k
     rows per group survive the map side of the shuffle)."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     ranked = (
@@ -254,7 +248,6 @@ def q95_window_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — one shuffle serves all five functions. Ranks order by
     a tie-heavy key (rank semantics are tie-stable); value-carrying
     functions order by the unique o_orderkey."""
-    tune_session(spark)
     orders = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 200)
@@ -300,7 +293,6 @@ def q79_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT — the set operators the reference never grew
     (SURVEY.md §2.7 'No intersect/except'). Both compile to join-based
     plans (left-semi / left-anti over distinct keys)."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     building = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
@@ -362,7 +354,6 @@ def q96_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB path: fixed memory, map-side mergeable, one shuffle of
     sketch state instead of a sort of the column.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         # try_cast, not cast: NULL for NaN/Inf (quantiles skip NULLs)
@@ -442,7 +433,6 @@ def q97_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale factor — a native double avg would let partial-aggregation
     order move rows sitting near the 2× boundary.
     """
-    tune_session(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("_sq_orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("_sq_lineitem")
     return spark.sql(
@@ -532,7 +522,6 @@ def q81_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..session import persist_tracked
 
-    tune_session(spark)
     big = 1 << 62  # NULLS LAST sentinel, far above any real cents value
     priced = load(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("vc")
@@ -643,7 +632,6 @@ def q34_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-reduced aggregate so the explode factor (3×) applies to
     group rows, not data rows.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.sum(F.col("l_quantity").cast("decimal(28,6)")).cast("double").alias("sum_qty"),

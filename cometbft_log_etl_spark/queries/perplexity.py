@@ -54,7 +54,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -270,7 +269,6 @@ def q106_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram LM fitted on the target-domain slice — CCNet's quality
     bucketing, with the tertile thresholds computed scale-safely over
     the (lang, milli-nat) distribution table."""
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = load(spark, sf_dir, "documents")

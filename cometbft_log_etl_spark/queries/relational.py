@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from ._det import dec, dmean, dsum, sql_dmean, sql_dsum
@@ -51,7 +50,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis createAnalysis, /root/reference/ossplugins/timeout-analysis/
     processor.go:217-239) as one declarative groupBy.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
@@ -94,7 +92,6 @@ def q02_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     app.go:103-108) — a dimension lookup that must never shuffle the fact
     side. `F.broadcast` pins the strategy.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_discount")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -130,7 +127,6 @@ LIMIT 10
 )
 def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective 3-way join + agg + deterministic top-k."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     orders = (
         load(spark, sf_dir, "orders")
@@ -175,7 +171,6 @@ GROUP BY n.n_name, r.r_name
 )
 def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: star join (two facts + broadcast dim chain)."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
     orders = (
         load(spark, sf_dir, "orders")
@@ -216,7 +211,6 @@ def q87_selective_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the early `_msg` tag filters (S3/S4,
     /root/reference/internal/parser/dispatcher.go:69-97).
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -248,7 +242,6 @@ GROUP BY c.c_mktsegment
 )
 def q88_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS): customers with ≥1 finished order."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select("o_custkey")
     return (
@@ -274,7 +267,6 @@ def q89_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P7d/e, /root/reference/ossplugins/network-latency/processor.go:449-497)
     — pendings that never matched are exactly an anti-join in batch.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
     orders = load(spark, sf_dir, "orders").select("o_custkey")
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
@@ -296,7 +288,6 @@ GROUP BY o.o_orderpriority
 def q77_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped distinct counts (exact), reference analog: distinct connected
     peers per node (P7d, collect_set cardinality)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -324,7 +315,6 @@ def q90_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional counts per group — the reference's by-step / by-type
     count maps (P8b, /root/reference/ossplugins/timeout-analysis/
     processor.go:217-239) as count_if columns."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     finished_value = F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")).otherwise(F.lit(0.0))
     return orders.groupBy(F.year("o_orderdate").alias("order_year")).agg(

@@ -12,12 +12,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
+from ..tables import load
+from . import register
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 _US = timedelta(microseconds=1)
-from ..tables import load
-from . import register
 
 
 @register(
@@ -36,7 +35,6 @@ def q98_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured field access — the `_msg` tag peek (S3,
     /root/reference/internal/parser/dispatcher.go:69-97) is exactly
     get_json_object before full parse."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.filter(F.col("event_type") == "purchase").select(
@@ -74,7 +72,6 @@ def q99_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar surface — split (C1), regexp_extract (C4/C13/C14),
     substring_index peer-id split (C10, /root/reference/lib/format.go:57-62),
     case conversion (C11), contains (S4)."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -112,7 +109,6 @@ def q129_hash_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base64/hex codecs (C6/C8 msgBytes decode). The md5-prefix hash bucket
     is the engine's portable (Spark == DuckDB) hash partitioner, also used
     by the MinHash/SimHash dedup operators."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     b64 = F.base64(F.col("event_type").cast("binary"))
     return ev.filter(F.col("event_id") < 200).select(
@@ -149,7 +145,6 @@ def q130_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time surface — RFC3339 timestamp handling (C12,
     /root/reference/lib/time.go:5-13) and the ms-latency arithmetic used by
     every latency plugin (P1-P3, P7)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.filter(F.col("event_id") < 200).select(
         "event_id",
@@ -189,7 +184,6 @@ def q131_case_when_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE/COALESCE/NULLIF surface — step-name formatting (C11,
     /root/reference/lib/format.go:49-55 is a finite-vocabulary CASE) and
     channel naming (D3, /root/reference/types/channels.go:17-47)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.filter(F.col("event_id") < 500).select(
         "event_id",
@@ -245,7 +239,6 @@ def q127_vote_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.blocktext import parse_vote_string
 
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 300)
     eid = F.col("event_id")
     md5s = lambda c: F.upper(F.md5(c.cast("string").cast("binary")))  # noqa: E731
@@ -353,7 +346,6 @@ def q128_block_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.blocktext import parse_block_udf
 
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 200)
     eid = F.col("event_id")
     md5s = lambda c: F.upper(F.md5(c.cast("string").cast("binary")))  # noqa: E731
@@ -484,7 +476,6 @@ def q44_varint_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.protowire import _read_varint, _write_varint
 
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 300)
     v = (F.col("event_id") * F.col("event_id") * 131) % 268435455
 

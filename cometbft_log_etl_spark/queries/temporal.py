@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -53,7 +52,6 @@ def q48_time_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous-aggregate shape; bucket arithmetic stays in integer
     epoch-micros so both engines bucket identically.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     r = ev.select(
         "event_type",
@@ -111,7 +109,6 @@ def q35_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..plans._matching import asof_attach
 
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", F.col("ts").alias("timestamp"), F.col("value").alias("click_value")

@@ -48,7 +48,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -218,7 +217,6 @@ def q16_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     _N_MERGES rounds unrolled as DuckDB CTEs (module docstring);
     independent-Python ground truth additionally in
     tests/test_tokenizer.py."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     rows = bpe_fit(docs)
     return spark.createDataFrame(
@@ -258,7 +256,6 @@ def q18_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; the corpus side only ever shuffles words). Oracle: the same
     unrolled CTE chain, encode half re-derived from syms_8; ground
     truth additionally in tests/test_tokenizer.py."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     _, state = bpe_fit_with_state(docs)
     lengths = state.select("w", F.size("syms").alias("n_subtokens"))

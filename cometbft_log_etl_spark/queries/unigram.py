@@ -50,7 +50,6 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 
@@ -406,7 +405,6 @@ def q121_unigram_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same candidate selection + unrolled Viterbi-EM as DuckDB CTEs;
     independent-Python ground truth additionally in
     tests/test_unigram.py."""
-    tune_session(spark)
     model_rows, _ = unigram_fit_with_state(
         spark, load(spark, sf_dir, "documents"), with_encode=False
     )
@@ -434,7 +432,6 @@ def q122_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     fired). Word -> n_pieces comes from ONE vocabulary-bounded encode
     table joined back onto the token stream (the q18 join shape: the
     corpus side only ever shuffles words)."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     _, enc = unigram_fit_with_state(spark, docs)
     occ = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w")).filter(
@@ -851,7 +848,6 @@ def q135_unigram_soft_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward+backward log-sum-exp DPs unrolled to _UNI_LMAX positions as
     DuckDB list-CTEs; independent pure-Python ground truth in
     tests/test_unigram_soft.py."""
-    tune_session(spark)
     rows = unigram_soft_fit(spark, load(spark, sf_dir, "documents"))
     out = spark.createDataFrame(
         rows or [], "piece string, eu decimal(38,9), logp decimal(14,9)"
@@ -935,7 +931,6 @@ def q137_unigram_soft_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q135); the encode table is word-vocabulary-bounded and joins the
     token stream exactly like q122 — the corpus side only ever
     shuffles words."""
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     _, words, model, dp2 = unigram_soft_fit_with_state(spark, docs)
     occ = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w")).filter(

@@ -41,7 +41,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_session
 from ..tables import load
 from . import register
 from .datapipe import _SQL_H32, _h32
@@ -142,7 +141,6 @@ FROM fps LEFT JOIN per_doc_share ON per_doc_share.doc_id = fps.doc_id
 def q75_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document winnowing fingerprint stats plus the most-shared
     fingerprint's document count — the MOSS-style triage report."""
-    tune_session(spark)
     from ..session import default_parallelism
 
     docs = (

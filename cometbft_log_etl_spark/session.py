@@ -3,8 +3,9 @@
 The driver may hand us an already-built session (``__spark_entry__.entry``),
 so everything that affects result correctness must be settable at runtime:
 session time zone (UTC — DuckDB oracle timestamps are naive UTC), shuffle
-partitioning, and AQE. ``tune_session`` applies those; ``get_spark`` builds
-a local session for tests/bench with the same settings.
+partitioning, and AQE. ``_session_conf`` is the one table of those settings;
+``tune_session`` applies it to any session, and ``get_spark`` builds a local
+session for tests/bench from the same table.
 """
 
 from __future__ import annotations
@@ -21,38 +22,46 @@ def _aqe() -> str:
     return "false" if os.environ.get("SPARK_GRAFT_AQE", "true").lower() == "false" else "true"
 
 
-# Runtime-settable configs applied to any session we touch. These are both
-# correctness (timeZone) and 100TB-posture (AQE, skew join) settings.
-_RUNTIME_CONF = {
-    "spark.sql.session.timeZone": "UTC",
-    # Spark 4.x reads tz-naive parquet timestamps as TIMESTAMP_NTZ by
-    # default, which unix_micros/unix_millis reject. Our semantics (matching
-    # the reference's UTC timestamps, lib/time.go:5-13) are "naive == UTC
-    # instant", so read them as TIMESTAMP under the UTC session tz.
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-}
-
-
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` (default 32): the local[N] width, the shuffle
+    partition count and the explicit-width repartitions. Anything but a
+    positive integer is rejected here, at the point of use."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return n
 
 
-def tune_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
+def _session_conf() -> dict[str, str]:
+    """Runtime-settable configs applied to any session we touch. These are
+    both correctness (timeZone) and 100TB-posture (AQE, skew join)
+    settings."""
+    aqe = _aqe()
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        # Spark 4.x reads tz-naive parquet timestamps as TIMESTAMP_NTZ by
+        # default, which unix_micros/unix_millis reject. Our semantics (matching
+        # the reference's UTC timestamps, lib/time.go:5-13) are "naive == UTC
+        # instant", so read them as TIMESTAMP under the UTC session tz.
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.adaptive.enabled": aqe,
+        "spark.sql.adaptive.coalescePartitions.enabled": aqe,
+        "spark.sql.adaptive.skewJoin.enabled": aqe,
+        "spark.sql.shuffle.partitions": str(default_parallelism()),
+    }
+
+
+def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable correctness/perf configs to an existing session."""
-    conf = dict(_RUNTIME_CONF)
-    conf["spark.sql.adaptive.enabled"] = _aqe()
-    conf["spark.sql.adaptive.coalescePartitions.enabled"] = _aqe()
-    conf["spark.sql.adaptive.skewJoin.enabled"] = _aqe()
-    for k, v in conf.items():
+    for k, v in _session_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in some deployments; builder path sets it anyway
-    n = shuffle_partitions or default_parallelism()
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    except Exception:
-        pass
     return spark
 
 
@@ -169,7 +178,6 @@ def release_new_persists(spark: SparkSession, before: set[int]) -> int:
 def get_spark(
     app_name: str = "cometbft-log-etl-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for this engine.
@@ -179,18 +187,16 @@ def get_spark(
     joins), so the same plans run unchanged on a real cluster.
     """
     cpus = cpus or default_parallelism()
-    builder = (
+    builder_only = {
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", _aqe())
-        .config("spark.sql.adaptive.coalescePartitions.enabled", _aqe())
-        .config("spark.sql.adaptive.skewJoin.enabled", _aqe())
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(map={**_session_conf(), **builder_only})
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return tune_session(spark, shuffle_partitions)
+    return tune_session(spark)

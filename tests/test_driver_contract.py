@@ -11,7 +11,7 @@ from cometbft_log_etl_spark.queries import catalog
 from cometbft_log_etl_spark.testing.compare import run_compare
 
 # Timestamp-heavy + iterative + new queries: the ones with the most to
-# lose if tune_session stops being called inside every query fn.
+# lose if the registry stops wrapping every query fn in tune_session.
 _TZ_SENSITIVE = [
     "q95_window_battery",
     "q23_sessionization",
@@ -29,8 +29,9 @@ _TZ_SENSITIVE = [
 @pytest.mark.parametrize("name", _TZ_SENSITIVE)
 def test_query_survives_hostile_session_timezone(spark, sf_dir, name):
     """The driver hands queries a session it configured; a non-UTC
-    session timezone must not change results (every query fn calls
-    tune_session internally — this guards that contract)."""
+    session timezone must not change results (queries.register wraps
+    every query fn so it calls tune_session first — this guards that
+    contract)."""
     original = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Australia/Eucla")

@@ -44,9 +44,9 @@ _PRONE = [
 def odd_spark(spark):
     """The shared session re-tuned to 3-way parallelism for this module.
 
-    Every query calls tune_session internally, which reads the
-    SPARK_GRAFT_CPUS env on each call — so the env var (not a one-shot
-    conf set) is the lever that actually survives into the query plans.
+    queries.register wraps every query fn in tune_session, which reads
+    SPARK_GRAFT_CPUS on each call — so the env var is the one lever for
+    the partition count; a one-shot conf set is undone by the next query.
     Restored afterwards so later modules run at normal width.
     """
     import os

@@ -24,7 +24,7 @@ def main() -> int:
     cat = catalog()
     if names:
         cat = {n: cat[n] for n in names}
-    spark = get_spark(app_name="check-correctness", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="check-correctness", cpus=8)
     failures = 0
     for name, qdef in cat.items():
         t0 = time.time()

@@ -124,7 +124,7 @@ def main() -> int:
     if names:
         cat = {n: cat[n] for n in names}
     variants = _build_variants(sf_dir)
-    spark = get_spark(app_name="probe-corpora", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="probe-corpora", cpus=8)
     failures = 0
     for vname, vdir in variants.items():
         ok = 0

@@ -100,23 +100,14 @@ def main() -> int:
 
     big = build_corpus(args.sf_dir, args.out, args.table)
 
-    from pyspark.sql import SparkSession
-
     from cometbft_log_etl_spark.queries import catalog
     from cometbft_log_etl_spark.session import (
+        get_spark,
         persistent_rdd_ids,
         release_new_persists,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .appName("stress10x")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="stress10x", driver_memory="48g")
     cat = catalog()
     bad = [q for q in args.queries if q not in cat]
     if bad:

@@ -143,8 +143,11 @@ def run_pipeline(
     - without: eager localCheckpoint (see etl_events) — no disk
       location to stage to, and at in-memory scales the two are equal.
 
-    Every result table then goes through the sinks' ``store`` under
-    ``registry.two_phase_fanout``. ``registry.run_plugins`` and
+    ``registry.run_plugins`` then builds every plugin's tables; the
+    build runs one job of its own, the eager checkpoint of the
+    network-latency match ledger. Every result table then goes through
+    the sinks' ``store`` under ``registry.two_phase_fanout``, one
+    concurrent map over all tables. ``registry.run_plugins`` and
     ``registry.two_phase_fanout`` are looked up on the module at call
     time, so wrappers installed from outside (perfbench/layers.py) see
     every table.

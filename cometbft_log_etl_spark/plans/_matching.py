@@ -45,16 +45,15 @@ def confirm_pairs(
     )
     return (
         s.join(r, [*key_cols, "match_seq"])
-        .withColumn(
-            "latency_ms",
-            ((F.unix_micros("received_time") - F.unix_micros("sent_time")) / F.lit(1000)).cast("long"),
-        )
+        .withColumn("latency_ms", latency_ms(F.col("received_time"), F.col("sent_time")))
         .withColumn("status", F.lit("confirmed"))
     )
 
 
-def latency_ms(recv_ts: Column, sent_ts: Column) -> Column:
-    return ((F.unix_micros(recv_ts) - F.unix_micros(sent_ts)) / F.lit(1000)).cast("long")
+def latency_ms(end: Column, start: Column) -> Column:
+    """Whole milliseconds from ``start`` to ``end`` (signed, truncated
+    toward zero) — every plugin's latency and duration column."""
+    return ((F.unix_micros(end) - F.unix_micros(start)) / F.lit(1000)).cast("long")
 
 
 def asof_attach(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._matching import asof_attach
+from ._matching import asof_attach, latency_ms
 from .registry import register_plugin
 
 # Canonical step order (calculateStepDuration :109).
@@ -115,7 +115,7 @@ def consensus_timing(events: DataFrame) -> dict[str, DataFrame]:
         F.slice(F.col("_entries"), 1, F.greatest(F.size("_entries") - 1, F.lit(0))),
         lambda cur, prev: F.struct(
             F.concat(prev["step"], F.lit("_to_"), cur["step"]).alias("key"),
-            ((F.unix_micros(cur["ts"]) - F.unix_micros(prev["ts"])) / 1000).cast("long").alias("value"),
+            latency_ms(cur["ts"], prev["ts"]).alias("value"),
         ),
     )
 
@@ -128,7 +128,7 @@ def consensus_timing(events: DataFrame) -> dict[str, DataFrame]:
         .withColumn("end_time", end_time)
         .withColumn(
             "total_round_time_ms",
-            ((F.unix_micros(end_time) - F.unix_micros("start_time")) / 1000).cast("long"),
+            latency_ms(end_time, F.col("start_time")),
         )
         .select(
             "node_id",

@@ -16,26 +16,34 @@ result tables:
 Matching (the FIFO multi-match join, SURVEY §2.6 P7a):
 - tier 1: composite key (sender, receiver, sha256(raw_bytes))
   (getCompositeKey :697-707) — FIFO pairing = row_number per key on
-  each side + equi-join on (key, seq). Out-of-order arrival needs no
-  special case in batch; latency is signed (recv − send) just as the
-  reference's out-of-order path produces (:163-166).
+  each side + ONE full outer join on (key, seq), whose rows are the
+  matched pairs, the sends left over and the receives left over.
+  Out-of-order arrival needs no special case in batch; latency is
+  signed (recv − send) just as the reference's out-of-order path
+  produces (:163-166).
 - tier 2: sends whose peer is unknown (TrySend → empty recipient id,
   convereter.go:523-530) are keyed by raw hash only; receives left
-  unmatched by tier 1 retry against them (rawHashFallbackMatch
-  :295-328).
-- leftovers on either side are the unmatched counts (in batch: an
-  anti-join by construction — rows absent from the matched set).
+  unmatched by tier 1 retry against them in a second full outer join
+  (rawHashFallbackMatch :295-328).
+- leftovers on either side are the unmatched counts.
+
+``match_ledger`` is that match as one frame, the port of the
+processor's single match state: one row per outcome (pair, unmatched
+send, unmatched receive), from which all five tables are derived.
 
 Self-receives (node == source peer) are dropped (:222-225); self-pairs
 never record latency (:331-334). recordLatency's timestamp argument is
 the RECEIVE time on every path, so first_seen/last_seen are receive-time
 bounds.
 
-Scale notes: the matching shuffles once per tier on the composite key
-(dominated by sha2 values — uniformly distributed, no skew); histograms
-shuffle once on (pair, message_type). The pair-level rollup REUSES the
-matched rows rather than re-scanning events, and every per-node /
-global aggregate is a partial-agg-friendly groupBy.
+Scale notes: the match shuffles once per tier on the composite key
+(dominated by sha2 values — uniformly distributed, no skew). The ledger
+is localCheckpoint-ed once, eagerly, while the plugin is built, so the
+five tables plan over its rows and never re-run the match: histograms
+shuffle once on (pair, message_type), the pair rollup reuses the
+matched rows, and the per-node / global / duplicate stats are
+partial-agg-friendly groupBys over one per-event view of the ledger
+(its send-side rows unioned with its receive-side rows).
 """
 
 from __future__ import annotations
@@ -43,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._matching import fifo_rank
+from ._matching import fifo_rank, latency_ms
 from ._stats import go_latency_histogram
 from .registry import register_plugin
 
@@ -94,62 +102,87 @@ def _sides(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     return sends, recvs
 
 
-def _match(sends: DataFrame, recvs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Two-tier FIFO match. Returns (matched, unmatched_sends, unmatched_recvs)."""
-    keyed_sends = sends.filter(F.col("receiver_peer") != "")
-    raw_sends = sends.filter(F.col("receiver_peer") == "")
+# A ledger row's send side and receive side. The side a row lacks is
+# NULL; event timestamps never are, so a NULL time marks a missing side.
+_SEND = ["send_node", "send_validator", "receiver_peer", "sent_time"]
+_RECV = ["recv_node", "recv_validator", "sender_peer", "received_time"]
 
-    k1 = ["send_node", "receiver_peer", "raw_hash"]
-    s1 = fifo_rank(keyed_sends, ["send_node", "receiver_peer", "raw_hash"], "sent_time")
-    r1 = fifo_rank(
-        recvs.withColumnsRenamed({"sender_peer": "send_node", "recv_node": "receiver_peer"}),
-        k1,
-        "received_time",
-    )
-    m1 = s1.join(r1, [*k1, "match_seq"]).select(
-        F.col("send_node"),
-        "send_validator",
-        F.col("receiver_peer").alias("recv_node"),
-        "recv_validator",
-        s1["message_type"].alias("message_type"),
-        "raw_hash",
-        "sent_time",
-        "received_time",
-        F.lit(1).alias("tier"),
-    )
 
-    un_s1 = s1.join(r1.select(*k1, "match_seq"), [*k1, "match_seq"], "left_anti")
-    un_r1 = r1.join(s1.select(*k1, "match_seq"), [*k1, "match_seq"], "left_anti")
-
-    # tier 2: raw-hash-only fallback (TrySend sends vs tier-1 leftovers)
-    s2 = fifo_rank(raw_sends, ["raw_hash"], "sent_time").withColumnRenamed("match_seq", "seq2")
-    r2 = fifo_rank(
-        un_r1.drop("match_seq"), ["raw_hash"], "received_time"
-    ).withColumnRenamed("match_seq", "seq2")
-    m2 = s2.join(r2, ["raw_hash", "seq2"]).select(
-        s2["send_node"].alias("send_node"),
-        "send_validator",
-        r2["receiver_peer"].alias("recv_node"),
-        "recv_validator",
-        s2["message_type"].alias("message_type"),
-        "raw_hash",
-        "sent_time",
-        "received_time",
-        F.lit(2).alias("tier"),
+def _tier(
+    sends: DataFrame, recvs: DataFrame, send_key: list[str], recv_key: list[str], tier: int
+) -> DataFrame:
+    """One FIFO tier: rank each side per key by time, then ONE full outer
+    join on (key, match_seq). Each output row is a matched pair, a send
+    left over or a receive left over, in ledger columns."""
+    s = fifo_rank(sends, send_key, "sent_time")
+    recv_names = {"message_type": "_r_type", "raw_hash": "_r_hash", "match_seq": "_r_seq"}
+    r = fifo_rank(recvs, recv_key, "received_time").withColumnsRenamed(recv_names)
+    on = [
+        F.col(a) == F.col(recv_names.get(b, b))
+        for a, b in zip([*send_key, "match_seq"], [*recv_key, "match_seq"])
+    ]
+    paired = F.col("sent_time").isNotNull() & F.col("received_time").isNotNull()
+    return s.join(r, on, "full").select(
+        *_SEND,
+        *_RECV,
+        # msg_kind is decoded from msg_bytes, so one hash has one type
+        F.coalesce("message_type", "_r_type").alias("message_type"),
+        F.coalesce("raw_hash", "_r_hash").alias("raw_hash"),
+        F.when(paired, F.lit(tier)).alias("tier"),
     )
 
-    un_s2 = s2.join(r2.select("raw_hash", "seq2"), ["raw_hash", "seq2"], "left_anti")
-    un_r2 = r2.join(s2.select("raw_hash", "seq2"), ["raw_hash", "seq2"], "left_anti")
 
-    matched = m1.unionByName(m2).withColumn(
-        "latency_ms",
-        ((F.unix_micros("received_time") - F.unix_micros("sent_time")) / 1000).cast("long"),
+def match_ledger(events: DataFrame) -> DataFrame:
+    """The two-tier FIFO match as one frame: one row per match outcome —
+    a matched pair (``tier`` 1 or 2), an unmatched send or an unmatched
+    receive (``tier`` NULL). Rows keep the send's own ``receiver_peer``
+    and the receive's own ``sender_peer``, so every eligible send and
+    every eligible receive appears in exactly one row."""
+    sends, recvs = _sides(events)
+    t1 = _tier(
+        sends.filter(F.col("receiver_peer") != ""),
+        recvs,
+        ["send_node", "receiver_peer", "raw_hash"],
+        ["sender_peer", "recv_node", "raw_hash"],
+        1,
     )
-    # keyed sends get no second tier; receives fall through to tier 2,
-    # so only tier-2 leftovers are truly unmatched receives.
-    unmatched_sends = un_s1.select("send_node").unionByName(un_s2.select("send_node"))
-    unmatched_recvs = un_r2.select(F.col("receiver_peer").alias("recv_node"))
-    return matched, unmatched_sends, unmatched_recvs
+    # tier 2: raw-hash-only fallback (TrySend sends vs tier-1 leftover
+    # receives); keyed sends get no second tier
+    t2 = _tier(
+        sends.filter(F.col("receiver_peer") == ""),
+        t1.filter(F.col("sent_time").isNull()).select(*_RECV, "message_type", "raw_hash"),
+        ["raw_hash"],
+        ["raw_hash"],
+        2,
+    )
+    return (
+        t1.filter(F.col("sent_time").isNotNull())
+        .unionByName(t2)
+        .withColumn("latency_ms", latency_ms(F.col("received_time"), F.col("sent_time")))
+    )
+
+
+def _per_event(ledger: DataFrame) -> DataFrame:
+    """The ledger's send-side rows unioned with its receive-side rows:
+    one row per eligible send or receive, under its composite key
+    (sender, receiver, raw_hash) and with ``unmatched`` set when its
+    ledger row holds no pair."""
+
+    def side(ts: str, sender: str, receiver: str, validator: str, is_send: bool) -> DataFrame:
+        return ledger.filter(F.col(ts).isNotNull()).select(
+            F.col(sender).alias("sender"),
+            F.col(receiver).alias("receiver"),
+            F.col(validator).alias("validator_address"),
+            "message_type",
+            "raw_hash",
+            F.col(ts).alias("ts"),
+            F.lit(is_send).alias("is_send"),
+            F.col("tier").isNull().alias("unmatched"),
+        )
+
+    return side("sent_time", "send_node", "receiver_peer", "send_validator", True).unionByName(
+        side("received_time", "sender_peer", "recv_node", "recv_validator", False)
+    )
 
 
 def _with_pair(matched: DataFrame) -> DataFrame:
@@ -174,25 +207,15 @@ def _with_pair(matched: DataFrame) -> DataFrame:
 
 @register_plugin("network-latency")
 def network_latency(events: DataFrame) -> dict[str, DataFrame]:
-    from ..session import persist_tracked
-
-    sends, recvs = _sides(events)
-    matched, un_sends, un_recvs = _match(sends, recvs)
-    # The two-tier FIFO match (two window ranks + equi-join + anti-joins
-    # per tier) feeds all five result tables; without persistence every
-    # table's action replays it. The plugin-level analog of the O6 shared
-    # scan — measured 2.6× on the full plugin at 645k events. Unmatched
-    # sides are persisted too: they re-derive the ranked windows.
-    # persist_tracked so harness releases go through the CacheManager
-    # (a raw-RDD unpersist would leave a dead cache entry that makes
-    # every LATER run of the same plugin recompute per consumer).
-    matched = persist_tracked(matched)
-    un_sends = persist_tracked(un_sends)
-    un_recvs = persist_tracked(un_recvs)
-    # NOTE: persisting `paired`/`measurements` as well was measured SLOWER
-    # (the materialization barrier defeats column pruning into the cached
-    # matched relation); only the match core is worth pinning.
-    paired = _with_pair(matched).withColumn("timestamp", F.col("received_time"))
+    # Every table is a shallow aggregate of the one ledger. It is
+    # checkpointed eagerly, here in the build: all five tables then read
+    # its rows without re-planning or re-running the match, and the
+    # blocks go with the frame (ContextCleaner) instead of staying in
+    # the session's CacheManager the way a persist() would.
+    ledger = match_ledger(events).localCheckpoint(eager=True)
+    paired = _with_pair(ledger.filter(F.col("tier").isNotNull())).withColumn(
+        "timestamp", F.col("received_time")
+    )
 
     meta = ["node_pair_key", "node1_id", "node2_id", "node1_validator", "node2_validator"]
     measurements = go_latency_histogram(
@@ -239,89 +262,44 @@ def network_latency(events: DataFrame) -> dict[str, DataFrame]:
     # Per-node stats (updateNodeStats :399-425): every raw-eligible send/
     # receive counts; connected peers collect the raw peer id — including
     # the empty TrySend peer, mirroring addPeerToNode's "" entry (:427-437).
-    send_stats = sends.groupBy(F.col("send_node").alias("node_id")).agg(
-        F.first("send_validator").alias("validator_address"),
-        F.count(F.lit(1)).cast("int").alias("total_sends"),
-        F.collect_set("receiver_peer").alias("_peers_s"),
-    )
-    recv_stats = recvs.groupBy(F.col("recv_node").alias("node_id")).agg(
-        F.first("recv_validator").alias("validator_address"),
-        F.count(F.lit(1)).cast("int").alias("total_receives"),
-        F.collect_set("sender_peer").alias("_peers_r"),
-    )
-    un_send_stats = un_sends.groupBy(F.col("send_node").alias("node_id")).agg(
-        F.count(F.lit(1)).cast("int").alias("unmatched_sends")
-    )
-    un_recv_stats = un_recvs.groupBy(F.col("recv_node").alias("node_id")).agg(
-        F.count(F.lit(1)).cast("int").alias("unmatched_receives")
-    )
+    per_event = _per_event(ledger)
+    is_send, unmatched = F.col("is_send"), F.col("unmatched")
+    node = F.when(is_send, F.col("sender")).otherwise(F.col("receiver"))
+    peer = F.when(is_send, F.col("receiver")).otherwise(F.col("sender"))
     node_stats = (
-        send_stats.withColumnRenamed("validator_address", "_va_s")
-        .join(recv_stats.withColumnRenamed("validator_address", "_va_r"), "node_id", "full")
-        .join(un_send_stats, "node_id", "left")
-        .join(un_recv_stats, "node_id", "left")
-        .select(
-            "node_id",
-            F.coalesce("_va_s", "_va_r").alias("validator_address"),
-            F.coalesce("total_sends", F.lit(0)).alias("total_sends"),
-            F.coalesce("total_receives", F.lit(0)).alias("total_receives"),
-            F.array_sort(
-                F.array_distinct(
-                    F.concat(
-                        F.coalesce("_peers_s", F.array().cast("array<string>")),
-                        F.coalesce("_peers_r", F.array().cast("array<string>")),
-                    )
-                )
-            ).alias("connected_peers"),
-            F.coalesce("unmatched_sends", F.lit(0)).alias("unmatched_sends"),
-            F.coalesce("unmatched_receives", F.lit(0)).alias("unmatched_receives"),
+        per_event.groupBy(node.alias("node_id"))
+        .agg(
+            F.first("validator_address").alias("validator_address"),
+            F.count_if(is_send).cast("int").alias("total_sends"),
+            F.count_if(~is_send).cast("int").alias("total_receives"),
+            F.array_sort(F.collect_set(peer)).alias("connected_peers"),
+            F.count_if(is_send & unmatched).cast("int").alias("unmatched_sends"),
+            F.count_if(~is_send & unmatched).cast("int").alias("unmatched_receives"),
         )
         .withColumn("peer_count", F.size("connected_peers"))
     )
 
-    # Global unmatched stats (createUnmatchedStats :719-732).
-    totals = sends.agg(F.count(F.lit(1)).alias("_s")).crossJoin(
-        recvs.agg(F.count(F.lit(1)).alias("_r"))
-    )
-    global_stats = (
-        un_sends.agg(F.count(F.lit(1)).cast("int").alias("total_unmatched_sends"))
-        .crossJoin(un_recvs.agg(F.count(F.lit(1)).cast("int").alias("total_unmatched_receives")))
-        .crossJoin(totals)
-        .withColumn("total_messages", (F.col("_s") + F.col("_r")).cast("int"))
-        .drop("_s", "_r")
-        .filter((F.col("total_unmatched_sends") > 0) | (F.col("total_unmatched_receives") > 0))
-    )
+    # Global unmatched stats (createUnmatchedStats :719-732): the per-node
+    # counts rolled up.
+    global_stats = node_stats.agg(
+        F.sum("unmatched_sends").cast("int").alias("total_unmatched_sends"),
+        F.sum("unmatched_receives").cast("int").alias("total_unmatched_receives"),
+        F.sum(F.col("total_sends") + F.col("total_receives")).cast("int").alias("total_messages"),
+    ).filter((F.col("total_unmatched_sends") > 0) | (F.col("total_unmatched_receives") > 0))
 
     # Duplicate-traffic diagnostics (:800-818): per composite key (and
     # per raw hash for peer-less sends), counts with send>1 or recv>1.
-    s_key = sends.select(
-        F.col("send_node").alias("sender"),
-        F.col("receiver_peer").alias("receiver"),
-        "message_type",
-        "raw_hash",
-        F.col("sent_time").alias("ts"),
-        F.lit(1).alias("is_send"),
-    )
-    r_key = recvs.select(
-        F.col("sender_peer").alias("sender"),
-        F.col("recv_node").alias("receiver"),
-        "message_type",
-        "raw_hash",
-        F.col("received_time").alias("ts"),
-        F.lit(0).alias("is_send"),
-    )
     match_counts = paired.groupBy(
         F.col("send_node").alias("sender"),
         F.col("recv_node").alias("receiver"),
         "raw_hash",
     ).agg(F.count(F.lit(1)).cast("int").alias("match_count"))
     duplicates = (
-        s_key.unionByName(r_key)
-        .groupBy("sender", "receiver", "raw_hash")
+        per_event.groupBy("sender", "receiver", "raw_hash")
         .agg(
             F.first("message_type").alias("message_type"),
-            F.count_if(F.col("is_send") == 1).cast("int").alias("send_count"),
-            F.count_if(F.col("is_send") == 0).cast("int").alias("receive_count"),
+            F.count_if(is_send).cast("int").alias("send_count"),
+            F.count_if(~is_send).cast("int").alias("receive_count"),
             F.min("ts").alias("first_seen"),
             F.max("ts").alias("last_seen"),
         )

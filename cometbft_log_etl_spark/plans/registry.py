@@ -3,10 +3,12 @@ normalized events stream.
 
 Reference: pkg/pluginloader/loader.go:13-74 (Register/Init/Process/
 Finalize lifecycle) and pkg/pluginsdk/interfaces.go:10-25. In Spark the
-lifecycle collapses to a pure function `f(events_df) -> dict[table_name,
-DataFrame]`; the single-pass fan-out (main.go:77-79) becomes running
-every enabled plugin off one staged events DataFrame
-(pipeline.run_pipeline).
+lifecycle collapses to a function `f(events_df) -> dict[table_name,
+DataFrame]` that builds plans (network-latency also checkpoints its
+match ledger while it builds); the single-pass fan-out (main.go:77-79)
+becomes running every enabled plugin off one staged events DataFrame
+and writing every result table concurrently (`two_phase_fanout`, one
+concurrent map; pipeline.run_pipeline).
 
 The default-enabled set mirrors internal/config/config.go:67-83.
 """
@@ -62,8 +64,10 @@ def plugins() -> dict[str, PluginFn]:
     return dict(_PLUGINS)
 
 
-# threads that build plugin plans concurrently in run_plugins
+# threads that build plugin plans concurrently in run_plugins, and that
+# run result-table actions concurrently in two_phase_fanout
 _BUILD_WORKERS = 4
+_FANOUT_WORKERS = 6
 
 
 def run_plugins(events: DataFrame, enabled: list[str] | None = None) -> dict[str, DataFrame]:
@@ -73,11 +77,13 @@ def run_plugins(events: DataFrame, enabled: list[str] | None = None) -> dict[str
     fatal — the reference tolerates configured premium/custom plugins
     that aren't linked into the binary (pkg/pluginloader/loader.go:38-45).
 
-    Plugins are pure plan builders (no execution), but building nine
-    deep plan trees is driver-side work — hundreds of py4j round-trips
-    each — so independent plugins build on a small thread pool (py4j
-    releases the GIL on socket I/O). Result ordering stays deterministic:
-    tables merge in `names` order regardless of completion order.
+    Plugins mostly build plans without executing them; network-latency
+    also runs one job, the eager checkpoint of its match ledger. Building
+    nine deep plan trees is driver-side work — hundreds of py4j
+    round-trips each — so independent plugins build on a small thread
+    pool (py4j releases the GIL on socket I/O), and the ledger job runs
+    beside the other builds. Result ordering stays deterministic: tables
+    merge in `names` order regardless of completion order.
     """
     import logging
     from concurrent.futures import ThreadPoolExecutor
@@ -101,22 +107,13 @@ def run_plugins(events: DataFrame, enabled: list[str] | None = None) -> dict[str
     return out
 
 
-# The network-latency tables share persisted intermediates (the
-# matched/unmatched split) whose caches fill on FIRST touch; concurrent
-# first-touch jobs would each recompute the unfilled cache (measured
-# 2-3x slower all-parallel). Tables matching this prefix therefore
-# execute serially before any concurrent fan-out.
-CACHE_SHARING_PREFIX = "network_latency"
-
-
-def two_phase_fanout(tables: dict, action, max_workers: int = 6) -> dict:
-    """Execute ``action(name, df)`` for every result table, two-phase: the
-    cache-sharing family (CACHE_SHARING_PREFIX) serially first, then the
-    independent rest concurrently — Spark's scheduler interleaves those
-    jobs across executor slots, the shape that keeps a wide cluster busy
-    through many narrow stages. pipeline.run_pipeline writes every
-    result table through it, so the CLI, the ETL bench and the plugin
-    plan audit all share the same first-touch discipline.
+def two_phase_fanout(tables: dict, action) -> dict:
+    """Execute ``action(name, df)`` for every result table concurrently —
+    Spark's scheduler interleaves the jobs across executor slots, the
+    shape that keeps a wide cluster busy through many narrow stages.
+    pipeline.run_pipeline writes every result table through it, so the
+    CLI, the ETL bench and the plugin plan audit share one fan-out. (The
+    name is kept because perfbench/layers.py wraps the function by it.)
 
     Returns {table: action result} in ``tables`` order. Fail-fast with
     full diagnostics: the first exception is re-raised after the pool
@@ -126,24 +123,18 @@ def two_phase_fanout(tables: dict, action, max_workers: int = 6) -> dict:
     import logging
     from concurrent.futures import ThreadPoolExecutor
 
-    results: dict = {
-        name: action(name, df)
-        for name, df in tables.items()
-        if name.startswith(CACHE_SHARING_PREFIX)
-    }
-    rest = {n: df for n, df in tables.items() if n not in results}
+    results: dict = {}
     failures: list[tuple[str, Exception]] = []
-    if rest:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            futures = {n: pool.submit(action, n, df) for n, df in rest.items()}
-            for n, fut in futures.items():
-                try:
-                    results[n] = fut.result()
-                except Exception as exc:  # noqa: BLE001 — collected, first re-raised
-                    failures.append((n, exc))
+    with ThreadPoolExecutor(max_workers=_FANOUT_WORKERS) as pool:
+        futures = {n: pool.submit(action, n, df) for n, df in tables.items()}
+        for n, fut in futures.items():
+            try:
+                results[n] = fut.result()
+            except Exception as exc:  # noqa: BLE001 — collected, first re-raised
+                failures.append((n, exc))
     if failures:
         for n, exc in failures[1:]:
             logging.getLogger(__name__).error("fan-out of %r also failed: %s", n, exc)
         name, exc = failures[0]
         raise RuntimeError(f"fan-out of {name!r} failed") from exc
-    return {n: results[n] for n in tables if n in results}
+    return results

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ._matching import asof_attach
+from ._matching import asof_attach, latency_ms
 from .registry import register_plugin
 
 # handleStepStart (:128-152): only these seed the step-start map.
@@ -68,7 +68,7 @@ def _enriched_timeouts(events: DataFrame) -> DataFrame:
     ).withColumnRenamed("step_start_asof", "step_start_time")
     enriched = enriched.withColumn(
         "time_in_step_ms",
-        ((F.unix_micros("timestamp") - F.unix_micros("step_start_time")) / 1000).cast("long"),
+        latency_ms(F.col("timestamp"), F.col("step_start_time")),
     )
 
     # Recovery flag: the check runs BEFORE the current timeout is counted
@@ -138,7 +138,7 @@ def _clusters(timeouts: DataFrame) -> DataFrame:
         )
         .withColumn(
             "duration_ms",
-            ((F.unix_micros("end_time") - F.unix_micros("start_time")) / 1000).cast("long"),
+            latency_ms(F.col("end_time"), F.col("start_time")),
         )
         .filter(F.col("timeout_count") >= 3)
         .drop("cluster_id")

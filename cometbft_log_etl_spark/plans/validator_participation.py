@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._matching import asof_attach
+from ._matching import asof_attach, latency_ms
 from .registry import register_plugin
 
 _PHASE_STEP_EVENT = {
@@ -66,7 +66,7 @@ def validator_participation(events: DataFrame) -> dict[str, DataFrame]:
         ["height", "round", "phase"], "step_start",
     ).withColumn(
         "latency_ms",
-        ((F.unix_micros("timestamp") - F.unix_micros("step_start_asof")) / 1000).cast("long"),
+        latency_ms(F.col("timestamp"), F.col("step_start_asof")),
     )
 
     def phase_agg(phase: str, prefix: str):

@@ -1,7 +1,7 @@
-"""two_phase_fanout contract (plans/registry.py): cache-sharing family
-serial-first, independent rest concurrent, deterministic result order,
-fail-fast with every additional failure logged. The action is arbitrary,
-so these run without a Spark session."""
+"""two_phase_fanout contract (plans/registry.py): every table's action
+runs concurrently, results come back in deterministic order, fail-fast
+with every additional failure logged. The action is arbitrary, so these
+run without a Spark session."""
 
 from __future__ import annotations
 
@@ -12,26 +12,33 @@ import pytest
 from cometbft_log_etl_spark.plans.registry import two_phase_fanout
 
 
-def test_cache_family_runs_serially_first_and_order_is_preserved():
-    calls: list[str] = []
+def test_order_is_preserved_under_concurrency():
+    """Every table runs, and results come back in ``tables`` order even
+    when the first table completes last."""
+    others_done = threading.Event()
+    completed: list[str] = []
     lock = threading.Lock()
 
     def action(name, df):
+        # the first table waits until every other one has finished, so
+        # completion order is never `tables` order (and a serial fan-out
+        # would time out here)
+        if name == "vote_latencies":
+            assert others_done.wait(timeout=30)
         with lock:
-            calls.append(name)
+            completed.append(name)
+            if len(completed) == len(tables) - 1:
+                others_done.set()
         return f"done:{df}"
 
     tables = {
         "vote_latencies": 1,
         "network_latency_measurements": 2,
         "p2p_messages": 3,
-        "network_latency_global_stats": 4,
+        "tracer_events": 4,
     }
     out = two_phase_fanout(tables, action)
-    # the cache-sharing family executed before anything else, in order
-    assert calls[:2] == ["network_latency_measurements", "network_latency_global_stats"]
-    # results come back keyed and in `tables` order regardless of
-    # completion order
+    assert completed[-1] == "vote_latencies"
     assert list(out) == list(tables)
     assert out == {n: f"done:{v}" for n, v in tables.items()}
 
@@ -50,11 +57,3 @@ def test_first_failure_reraised_with_cause_and_rest_logged(caplog):
     assert isinstance(exc_info.value.__cause__, ValueError)
     # the OTHER failure is logged rather than silently discarded
     assert any("also failed" in r.message for r in caplog.records)
-
-
-def test_single_worker_degenerates_to_serial():
-    calls: list[str] = []
-    out = two_phase_fanout(
-        {"a": 1, "b": 2}, lambda n, df: calls.append(n) or df, max_workers=1
-    )
-    assert list(out) == ["a", "b"] and set(calls) == {"a", "b"}

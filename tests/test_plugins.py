@@ -230,6 +230,94 @@ def test_network_latency_node_and_global_stats(results):
     assert g.total_messages == total_sends + total_recvs
 
 
+def _network_latency_tables(spark, sc, log_dir) -> dict:
+    write_logs(sc, str(log_dir))
+    events = etl_events(spark, str(log_dir), materialize=True)
+    return run_plugins(events, enabled=["network-latency"])
+
+
+def _duplicate_one_send(sc) -> tuple[str, str]:
+    """Append a second copy of one tier-1 send line and of its receive
+    line; returns (sender node id, receiver node id)."""
+    import base64
+    import json
+
+    def logged(node: int, msg: str):
+        for t, line in sc.lines[node]:
+            obj = json.loads(line) if line.startswith("{") else {}
+            if obj.get("_msg") == msg:
+                yield t, line, obj
+
+    sender = 0
+    t, line, send = next(logged(sender, "Send"))
+    receiver = NODE_IDS.index(send["peer"].split("@")[0])
+    rt, rline, _ = next(
+        (rt, rline, recv)
+        for rt, rline, recv in logged(receiver, "Received bytes")
+        if recv["peer"].startswith(NODE_IDS[sender])
+        and base64.b64decode(recv["msgBytes"]) == bytes.fromhex(send["msgBytes"])
+    )
+    sc.lines[sender].append((t, line))
+    sc.lines[receiver].append((rt, rline))
+    return NODE_IDS[sender], NODE_IDS[receiver]
+
+
+def test_network_latency_duplicates_debug(spark, tmp_path):
+    """A repeated send and its repeated receive make one duplicate-traffic
+    row, and every other network-latency table moves by exactly one pair."""
+    base = _network_latency_tables(spark, build_scenario(heights=2), tmp_path / "base")
+    sc = build_scenario(heights=2)
+    sender, receiver = _duplicate_one_send(sc)
+    dup = _network_latency_tables(spark, sc, tmp_path / "dup")
+
+    assert base["network_latency_duplicates_debug"].count() == 0
+    rows = dup["network_latency_duplicates_debug"].collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.sender, r.receiver) == (sender, receiver)
+    assert (r.send_count, r.receive_count, r.match_count) == (2, 2, 2)
+
+    def totals(out: dict) -> dict:
+        sums = {
+            "measurements": ("network_latency_measurements", ["count"]),
+            "summary": ("network_latency_nodepair_summary", ["count"]),
+            "nodes": (
+                "network_latency_node_stats",
+                ["total_sends", "total_receives", "unmatched_sends", "unmatched_receives"],
+            ),
+            "global": (
+                "network_latency_global_stats",
+                ["total_unmatched_sends", "total_unmatched_receives", "total_messages"],
+            ),
+        }
+        return {
+            k: list(out[t].agg(*[F.sum(c) for c in cols]).collect()[0])
+            for k, (t, cols) in sums.items()
+        }
+
+    before, after = totals(base), totals(dup)
+    assert after["measurements"] == [before["measurements"][0] + 1]
+    assert after["summary"] == [before["summary"][0] + 1]
+    b = before["nodes"]
+    assert after["nodes"] == [b[0] + 1, b[1] + 1, b[2], b[3]]
+    g = before["global"]
+    assert after["global"] == [g[0], g[1], g[2] + 2]
+
+
+def test_network_latency_leaves_no_cache_entry(spark, tmp_path):
+    """Building the plugin and collecting its five tables adds no
+    CacheManager entry: the match ledger is checkpointed, not persisted."""
+    from cometbft_log_etl_spark import session
+
+    tracked = len(session._TRACKED_PERSISTS)
+    tables = _network_latency_tables(spark, build_scenario(heights=2), tmp_path)
+    for df in tables.values():
+        df.collect()
+    assert len(session._TRACKED_PERSISTS) == tracked
+    for name, df in tables.items():
+        assert "InMemoryRelation" not in df._jdf.queryExecution().withCachedData().toString(), name
+
+
 def test_tracer_events_union(results):
     out, sc = results
     df = out["tracer_events"]

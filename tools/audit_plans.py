@@ -612,16 +612,14 @@ PLUGIN_EXPECTATIONS = {
     "block_part_latencies": {"codegen": True, "max_scans": 2, "max_scan_cols": 9, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
     "consensus_steps": {"codegen": True, "max_scans": 1, "max_scan_cols": 26, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
     "consensus_timing": {"codegen": True, "max_scans": 3, "max_scan_cols": 6, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
-    "network_latency_duplicates_debug": {"codegen": True, "max_scans": 7, "max_scan_cols": 7, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
-    "network_latency_global_stats": {"codegen": True, "max_scans": 5, "max_scan_cols": 6, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
-    "network_latency_measurements": {"codegen": True, "max_scans": 5, "max_scan_cols": 7, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
-    # distinct-signature caps, not raw counts (round-14): these two
-    # plans' raw scan counts flap 7->10 and 5->10 between AQE on/off
-    # with byte-identical logical plans (stage reuse dedups identical
-    # subtree reprints) — the durable invariant is the set of DISTINCT
-    # pruned projections read (4-5 and 3 across both settings)
-    "network_latency_node_stats": {"codegen": True, "max_distinct_scans": 5, "max_scan_cols": 6, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
-    "network_latency_nodepair_summary": {"codegen": True, "max_distinct_scans": 3, "max_scan_cols": 7, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
+    # the network-latency family reads its checkpointed match ledger (a
+    # LogicalRDD, no parquet scan of its own); the scan gates live on
+    # the ledger's own plan, NETWORK_LATENCY_LEDGER_EXPECTATIONS below
+    "network_latency_duplicates_debug": {"codegen": True, "contains_not": ["CartesianProduct"]},
+    "network_latency_global_stats": {"codegen": True, "contains_not": ["CartesianProduct"]},
+    "network_latency_measurements": {"codegen": True, "contains_not": ["CartesianProduct"]},
+    "network_latency_node_stats": {"codegen": True, "contains_not": ["CartesianProduct"]},
+    "network_latency_nodepair_summary": {"codegen": True, "contains_not": ["CartesianProduct"]},
     "p2p_messages": {"codegen": True, "max_scans": 2, "max_scan_cols": 16, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
     # the timeout family's clusters/events tables read only the family's
     # shared pre-filtered intermediate (no parquet scan of their own)
@@ -631,6 +629,18 @@ PLUGIN_EXPECTATIONS = {
     "tracer_events": {"codegen": True, "max_scans": 3, "max_scan_cols": 26, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
     "validator_participation": {"codegen": True, "max_scans": 4, "max_scan_cols": 7, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
     "vote_latencies": {"codegen": True, "max_scans": 2, "max_scan_cols": 10, "pushed_filters": True, "contains_not": ["CartesianProduct"]},
+}
+
+
+# The network-latency match ledger runs BEHIND a localCheckpoint taken
+# while the plugin builds, so its five tables' plans read a LogicalRDD
+# — this gates the un-checkpointed match_ledger(events) plan over the
+# staged parquet events, the one plan of the family that scans them:
+# two tiers of window ranks + full outer joins over pruned send/receive
+# projections with the dispatch filter pushed down.
+NETWORK_LATENCY_LEDGER_EXPECTATIONS = {
+    "codegen": True, "max_scans": 5, "max_distinct_scans": 3, "max_scan_cols": 7,
+    "pushed_filters": True, "contains_not": ["CartesianProduct"],
 }
 
 
@@ -714,16 +724,20 @@ def audit_cc(spark, sf_dir: str) -> list[str]:
 
 
 def audit_plugins(spark) -> list[str]:
-    """Plan gates for the production ETL fan-out (PLUGIN_EXPECTATIONS).
+    """Plan gates for the production ETL fan-out (PLUGIN_EXPECTATIONS)
+    and the network-latency match ledger
+    (NETWORK_LATENCY_LEDGER_EXPECTATIONS).
 
     Builds a fixture scenario, runs run_pipeline into a lake (so every
     plugin is planned off the staged events scan the CLI uses), and
-    checks each result table's executed plan. Every produced table MUST
+    checks each result table's executed plan plus the un-checkpointed
+    ledger plan over the same staged events. Every produced table MUST
     have a gate (and vice versa) so a new plugin can't ship ungated."""
     import shutil
     import tempfile
 
     from cometbft_log_etl_spark.pipeline import run_pipeline
+    from cometbft_log_etl_spark.plans.network_latency import match_ledger
     from cometbft_log_etl_spark.session import persistent_rdd_ids, release_new_persists
     from tests.fixtures import build_scenario, write_logs
 
@@ -734,7 +748,12 @@ def audit_plugins(spark) -> list[str]:
         logdir = os.path.join(work, "logs")
         write_logs(build_scenario(heights=4), logdir)
         tables = run_pipeline(spark, logdir, out_dir=os.path.join(work, "lake"), sim_id="audit")
-        del tables["events"]
+        ledger = match_ledger(tables.pop("events"))
+        ledger.collect()  # settle AQE on the final plan
+        plan = ledger._jdf.queryExecution().executedPlan().toString()
+        failures.extend(
+            check_plan("plugin:network_latency_ledger", plan, "", NETWORK_LATENCY_LEDGER_EXPECTATIONS)
+        )
         for n in sorted(set(PLUGIN_EXPECTATIONS) - set(tables)):
             failures.append(f"plugin table {n!r} gated but not produced")
         for n in sorted(set(tables) - set(PLUGIN_EXPECTATIONS)):
@@ -747,10 +766,11 @@ def audit_plugins(spark) -> list[str]:
             plan = df._jdf.queryExecution().executedPlan().toString()
             failures.extend(check_plan(f"plugin:{name}", plan, "", exp))
     finally:
-        # the fan-out pins shared intermediates (network-latency family)
-        # whose source parquet rmtree deletes below — release them so a
-        # shared session (pytest) neither holds dead blocks nor ever
-        # recomputes against the removed path
+        # the build checkpoints shared slices (the network-latency ledger,
+        # the timeout family's enriched rows) as persisted RDDs until the
+        # ContextCleaner collects them — release them now, with anything
+        # else persisted here, so a shared session (pytest) holds no blocks
+        # derived from the parquet rmtree deletes below
         release_new_persists(spark, persisted_before)
         shutil.rmtree(work, ignore_errors=True)
     return failures
@@ -964,7 +984,8 @@ def main() -> int:
         print(
             f"all {len(EXPECTATIONS)} headline plans, "
             f"{len(CC_EXPECTATIONS)} CC iteration plans and "
-            f"{len(PLUGIN_EXPECTATIONS)} plugin fan-out plans hold their scale properties"
+            f"{len(PLUGIN_EXPECTATIONS)} plugin fan-out plans (plus the network-latency "
+            "ledger) hold their scale properties"
         )
     return 1 if failures else 0
 
